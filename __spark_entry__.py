@@ -16,8 +16,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datacube_core_spark.geom import GRID_PAGES
+from datacube_core_spark.geom.lonlat import chop_along_antimeridian
+from datacube_core_spark.geom.polygon import box_ring, pack_multipolygon
+from datacube_core_spark.operators.ghpip import GeohashPipIndex
 from datacube_core_spark.operators.knn import knn_join
-from datacube_core_spark.operators.pip import pip_join
+from datacube_core_spark.operators.pip import PipIndex, pip_join
+from datacube_core_spark.operators.s2pip import S2PipIndex
 from datacube_core_spark.operators.tiling import explode_bbox_tiles, with_tile
 from datacube_core_spark.sources.pages import boxed_pages, pages, pages_cte
 from datacube_core_spark.sources.regions import REGIONS_CTE, regions
@@ -32,21 +36,52 @@ _SY = _G.tile_size[0]
 _OX = _G.origin[1]  # -180.0
 _OY = _G.origin[0]  # -90.0
 
-# PipIndex is a build-once object (driver-side tile enumeration + geometry
-# broadcast); memoize per SparkSession so consecutive queries share it
-_PIP_INDEX_CACHE: dict = {}
+# index builds are build-once objects (driver-side enumeration + geometry
+# broadcast): memoize per SparkSession so consecutive queries share them;
+# a new session replaces the old session's entry under the same key
+_SESSION_MEMO: dict = {}
+
+
+def _session_memo(spark: SparkSession, key: str, build: Callable[[], object]):
+    hit = _SESSION_MEMO.get(key)
+    if hit is None or hit[0] != id(spark):
+        hit = _SESSION_MEMO[key] = (id(spark), build())
+    return hit[1]
+
+
+def _dateline_regions(spark: SparkSession, region_id: int) -> DataFrame:
+    """One-row region table: the extended-longitude footprint 170..190
+    chopped along ±180 into a two-part multipolygon."""
+    chopped = chop_along_antimeridian([[box_ring(170.0, -20.0, 190.0, 25.0)]])
+    return spark.createDataFrame(
+        [(region_id, "dateline", -180.0, -20.0, 180.0, 25.0, bytearray(pack_multipolygon(chopped)))],
+        "region_id INT, name STRING, left DOUBLE, bottom DOUBLE, right DOUBLE, top DOUBLE, geom BINARY",
+    )
 
 
 def _pip_index(spark: SparkSession):
-    from datacube_core_spark.operators.pip import PipIndex
+    return _session_memo(spark, "pip", lambda: PipIndex(spark, regions(spark), _G))
 
-    key = id(spark)
-    idx = _PIP_INDEX_CACHE.get(key)
-    if idx is None:
-        idx = PipIndex(spark, regions(spark), _G)
-        _PIP_INDEX_CACHE.clear()
-        _PIP_INDEX_CACHE[key] = idx
-    return idx
+
+def _s2pip_index(spark: SparkSession):
+    """S2 covering index over the 240 patchwork regions PLUS the chopped
+    dateline region (region_id 240)."""
+    return _session_memo(
+        spark, "s2pip", lambda: S2PipIndex(spark, regions(spark).unionByName(_dateline_regions(spark, 240)))
+    )
+
+
+def _ghpip_index(spark: SparkSession):
+    """Geohash covering index over the same region set as _s2pip_index."""
+    return _session_memo(
+        spark, "ghpip", lambda: GeohashPipIndex(spark, regions(spark).unionByName(_dateline_regions(spark, 240)))
+    )
+
+
+def _dateline_index(spark: SparkSession):
+    return _session_memo(
+        spark, "dateline", lambda: PipIndex(spark, _dateline_regions(spark, 0), _G, distributed_classify=False)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -284,55 +319,6 @@ def q_knn_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("qid", "doc_id", "dist_sq", "rank")
 
 
-_S2PIP_INDEX_CACHE: dict = {}
-
-
-def _s2pip_index(spark: SparkSession):
-    """Build-once S2 covering index over the 240 patchwork regions PLUS
-    the chopped dateline region (region_id 240) — memoized per session
-    like _pip_index."""
-    from datacube_core_spark.geom.lonlat import chop_along_antimeridian
-    from datacube_core_spark.geom.polygon import box_ring, pack_multipolygon
-    from datacube_core_spark.operators.s2pip import S2PipIndex
-
-    key = id(spark)
-    idx = _S2PIP_INDEX_CACHE.get(key)
-    if idx is None:
-        chopped = chop_along_antimeridian([[box_ring(170.0, -20.0, 190.0, 25.0)]])
-        extra = spark.createDataFrame(
-            [(240, "dateline", -180.0, -20.0, 180.0, 25.0, bytearray(pack_multipolygon(chopped)))],
-            "region_id INT, name STRING, left DOUBLE, bottom DOUBLE, right DOUBLE, top DOUBLE, geom BINARY",
-        )
-        idx = S2PipIndex(spark, regions(spark).unionByName(extra))
-        _S2PIP_INDEX_CACHE.clear()
-        _S2PIP_INDEX_CACHE[key] = idx
-    return idx
-
-
-_GHPIP_INDEX_CACHE: dict = {}
-
-
-def _ghpip_index(spark: SparkSession):
-    """Build-once geohash covering index over the same region set as
-    _s2pip_index (240 patchwork rects + the chopped dateline region)."""
-    from datacube_core_spark.geom.lonlat import chop_along_antimeridian
-    from datacube_core_spark.geom.polygon import box_ring, pack_multipolygon
-    from datacube_core_spark.operators.ghpip import GeohashPipIndex
-
-    key = id(spark)
-    idx = _GHPIP_INDEX_CACHE.get(key)
-    if idx is None:
-        chopped = chop_along_antimeridian([[box_ring(170.0, -20.0, 190.0, 25.0)]])
-        extra = spark.createDataFrame(
-            [(240, "dateline", -180.0, -20.0, 180.0, 25.0, bytearray(pack_multipolygon(chopped)))],
-            "region_id INT, name STRING, left DOUBLE, bottom DOUBLE, right DOUBLE, top DOUBLE, geom BINARY",
-        )
-        idx = GeohashPipIndex(spark, regions(spark).unionByName(extra))
-        _GHPIP_INDEX_CACHE.clear()
-        _GHPIP_INDEX_CACHE[key] = idx
-    return idx
-
-
 def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering key + fixed-width layout bucket
     (operators/zorder.py — the published technique behind Delta
@@ -545,31 +531,6 @@ def q_doc2dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resolved.where(F.col("error").isNull()).select(
         "id", "product", "ts", "crs", "lon_min", "lat_min", "lon_max", "lat_max", "uri"
     )
-
-
-_DATELINE_INDEX_CACHE: dict = {}
-
-
-def _dateline_index(spark: SparkSession):
-    """Build-once (like _pip_index): chop the extended-longitude footprint
-    and index it; memoized per session."""
-    from datacube_core_spark.geom.lonlat import chop_along_antimeridian
-    from datacube_core_spark.geom.polygon import box_ring, pack_multipolygon
-    from datacube_core_spark.operators.pip import PipIndex
-
-    key = id(spark)
-    idx = _DATELINE_INDEX_CACHE.get(key)
-    if idx is None:
-        raw = [[box_ring(170.0, -20.0, 190.0, 25.0)]]
-        chopped = chop_along_antimeridian(raw)
-        regs = spark.createDataFrame(
-            [(0, "dateline", -180.0, -20.0, 180.0, 25.0, bytearray(pack_multipolygon(chopped)))],
-            "region_id INT, name STRING, left DOUBLE, bottom DOUBLE, right DOUBLE, top DOUBLE, geom BINARY",
-        )
-        idx = PipIndex(spark, regs, _G, distributed_classify=False)
-        _DATELINE_INDEX_CACHE.clear()
-        _DATELINE_INDEX_CACHE[key] = idx
-    return idx
 
 
 def q_solar_day(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,9 +1,12 @@
 """Deduplication suite over the documents corpus (task-brief first-class ops).
 
-All hot-path computation stays JVM-side (Catalyst higher-order functions +
-``md5``-derived integer hashes); there are NO Python UDFs in any of these
-pipelines — the sketches (minhash, simhash) are computed with explode +
-aggregate plans, which scale as ordinary shuffles.
+Hashing and sketching stay JVM-side (Catalyst higher-order functions +
+``md5``-derived integer hashes): the sketches (minhash, simhash) are
+computed with explode + aggregate plans, which scale as ordinary
+shuffles.  The one Python stage is in :func:`with_shingles`: tokens are
+split in Catalyst, then a ``mapInPandas`` Arrow kernel assembles and
+dedups each document's n-gram strings (byte-identical to
+:func:`shingles_col`'s).
 
 The hash primitive is ``md5`` because it is bit-identical in Spark and
 DuckDB: every sketch operator here ships with a ``sql_*`` twin generator

@@ -9,63 +9,41 @@ prefix order, so no bit arithmetic and no Arrow keying pass are needed
 (the per-point key itself is pure Catalyst, :func:`..geom.cellkeys
 .geohash_col`).
 
-Tier discipline is S2PipIndex's, transplanted:
-
-1. big side: compute (or accept pre-keyed) max-precision geohash, then
-   one array+explode derives the prefix at every active covering
-   precision — shuffle-free, pure Catalyst.
-2. ONE broadcast equi-join resolves interior covering cells
-   (membership proven by the join alone) and axis-rect regions'
-   boundary cells (strict bbox predicate) — no Python.
-3. only generic regions' boundary-band candidates pay the exact numpy
-   strict-interior refine (same kernel discipline as
-   ``PipIndex._refine`` / ``S2PipIndex._refine``).
-
-100-TB notes: covering tables are geometry-bounded and broadcast;
-the big side is scanned once (twice when generic regions exist);
-prefix joins are AQE-friendly broadcast hash joins on short strings.
+The build, the tiered join and the exact refine are the covering-join
+core in ``pip.py`` (``_CoveringIndex``); this module supplies only the
+geohash keyer, the prefix ancestor and the geohash coverer.  Covering
+tables are geometry-bounded and broadcast; the big side is scanned once
+(twice when generic regions exist); prefix joins are AQE-friendly
+broadcast hash joins on short strings.
 Reference analog: ``datacube/drivers/postgis/_spatial.py:62-97``.
 """
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, List, Optional
+import functools
+from typing import Optional
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..geom.cellkeys import geohash_col
 from ..geom.ghcover import MAX_PRECISION, geohash_covering, pick_precision
-from ..geom.polygon import points_strictly_inside_multi, unpack_multipolygon
-from ..geom.s2cover import rect_parts
-from .s2pip import _rect_info
-
-_COV_SCHEMA = (
-    "region_id INT, pr INT, cell STRING, interior BOOLEAN, rect BOOLEAN, "
-    "r_left DOUBLE, r_bottom DOUBLE, r_right DOUBLE, r_top DOUBLE"
-)
+from .pip import _LEAF, _CoveringIndex
 
 
-def _cover_rows(rid: int, blob: bytes, target: int, precision: Optional[int]):
-    mp = unpack_multipolygon(blob)
+def _gh_cover(target: int, precision: Optional[int], mp):
     pr = precision if precision is not None else pick_precision(mp, target)
     keys, interior = geohash_covering(mp, pr)
-    is_rect, (l, b, r, t) = _rect_info(mp)
-    return [
-        (int(rid), int(pr), k, bool(i), is_rect, l, b, r, t)
-        for k, i in zip(keys, interior)
-    ]
+    return [pr] * len(keys), keys, interior
 
 
-class GeohashPipIndex:
+class GeohashPipIndex(_CoveringIndex):
     """Build-once geohash covering index of a region table (same
     ``region_id`` + packed-multipolygon ``geom`` contract as PipIndex /
-    S2PipIndex; driver loop below ``DISTRIBUTED_COVER_THRESHOLD``
-    regions, executor ``mapInPandas`` above it)."""
+    S2PipIndex; driver loop below the shared build threshold, executor
+    ``mapInPandas`` above it, ``distributed_cover`` forces either)."""
 
-    DISTRIBUTED_COVER_THRESHOLD = 10_000
+    _KEY_TYPE = "STRING"
 
     def __init__(
         self,
@@ -75,71 +53,14 @@ class GeohashPipIndex:
         precision: Optional[int] = None,
         distributed_cover: Optional[bool] = None,
     ):
-        if distributed_cover is None:
-            thresh = self.DISTRIBUTED_COVER_THRESHOLD
-            distributed_cover = (
-                regions_df.select(F.lit(1)).limit(thresh + 1).count() > thresh
-            )
+        cover = functools.partial(_gh_cover, int(target_cells_per_axis), precision)
+        self._build(spark, regions_df, cover, distributed_cover)
 
-        target = int(target_cells_per_axis)
-        if distributed_cover:
-            def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                cols = [
-                    "region_id", "pr", "cell", "interior", "rect",
-                    "r_left", "r_bottom", "r_right", "r_top",
-                ]
-                for pdf in batches:
-                    rows: List[tuple] = []
-                    for rid, blob in zip(pdf["region_id"], pdf["geom"]):
-                        rows.extend(_cover_rows(int(rid), bytes(blob), target, precision))
-                    if rows:
-                        yield pd.DataFrame(rows, columns=cols)
+    def _with_leaf(self, df: DataFrame, lon: str, lat: str) -> DataFrame:
+        return df.withColumn(_LEAF, geohash_col(F.col(lon), F.col(lat), MAX_PRECISION))
 
-            cov = (
-                regions_df.select("region_id", "geom")
-                .mapInPandas(kernel, schema=_COV_SCHEMA)
-                .localCheckpoint(eager=True)
-            )
-            gid = cov.where(~F.col("rect") & ~F.col("interior")).select("region_id").distinct()
-            collected = (
-                regions_df.join(F.broadcast(gid), on="region_id", how="left_semi")
-                .select("region_id", "geom")
-                .collect()
-            )
-            self.geom_map: Dict[int, bytes] = {
-                int(r["region_id"]): bytes(r["geom"]) for r in collected
-            }
-        else:
-            rows = regions_df.select("region_id", "geom").collect()
-            cov_rows: List[tuple] = []
-            self.geom_map = {}
-            for r in sorted(rows, key=lambda r: r["region_id"]):
-                rid, blob = int(r["region_id"]), bytes(r["geom"])
-                part = _cover_rows(rid, blob, target, precision)
-                cov_rows.extend(part)
-                if part and not part[0][4]:
-                    self.geom_map[rid] = blob
-            if not cov_rows:
-                raise ValueError("GeohashPipIndex built from an empty region table")
-            cov = spark.createDataFrame(cov_rows, _COV_SCHEMA)
-
-        tier_rows = cov.groupBy("pr").agg(
-            F.max((F.col("interior") | F.col("rect")).cast("int")).alias("cat"),
-            F.max((~F.col("interior") & ~F.col("rect")).cast("int")).alias("gen"),
-        ).collect()
-        self.precisions = sorted(int(r["pr"]) for r in tier_rows)
-        self._has_catalyst = any(r["cat"] for r in tier_rows)
-        self._has_generic = any(r["gen"] for r in tier_rows)
-        if not self.precisions:
-            raise ValueError("GeohashPipIndex built from an empty region table")
-        self._catalyst = cov.where(F.col("interior") | F.col("rect")).select(
-            "pr", "cell", "region_id", "interior",
-            "r_left", "r_bottom", "r_right", "r_top",
-        )
-        self._boundary_gen = cov.where(~F.col("interior") & ~F.col("rect")).select(
-            "pr", "cell", "region_id"
-        )
-        self._bc_geoms = spark.sparkContext.broadcast(self.geom_map)
+    def _ancestor(self, leaf, precision: int):
+        return F.substring(leaf, 1, precision)
 
     def join(
         self,
@@ -153,91 +74,4 @@ class GeohashPipIndex:
         (PipIndex's output contract).  ``key_col`` names a pre-existing
         max-precision geohash column — the external-table interop case;
         when omitted the key is computed in pure Catalyst."""
-        base_cols = keep_cols if keep_cols is not None else [
-            c for c in pages_df.columns if c not in (lon, lat, key_col)
-        ]
-        out_cols = [*base_cols, lon, lat, "region_id"]
-
-        if key_col is None:
-            keyed = pages_df.select(*base_cols, lon, lat).withColumn(
-                "__gh_leaf", geohash_col(F.col(lon), F.col(lat), MAX_PRECISION)
-            )
-        else:
-            keyed = pages_df.select(
-                *base_cols, lon, lat, F.col(key_col).alias("__gh_leaf")
-            )
-        if self._has_catalyst and self._has_generic:
-            # both tiers consume the keyed big side — materialize it once
-            # so the leaf-keying pass (and the caller's derivation) does
-            # not run per tier (guide §2.4/§5)
-            keyed = keyed.localCheckpoint(eager=False)
-        leaf = F.col("__gh_leaf")
-
-        elems = [
-            F.struct(F.lit(p).alias("pr"), F.substring(leaf, 1, p).alias("cell"))
-            for p in self.precisions
-        ]
-        sub = (
-            keyed.withColumn("__gh_p", F.explode(F.array(*elems)))
-            .select(*base_cols, lon, lat, "__gh_p.pr", "__gh_p.cell")
-        )
-
-        parts: List[DataFrame] = []
-        if self._has_catalyst:
-            parts.append(
-                sub.join(F.broadcast(self._catalyst), on=["pr", "cell"], how="inner")
-                .where(
-                    F.col("interior")
-                    | (
-                        (F.col(lon) > F.col("r_left"))
-                        & (F.col(lon) < F.col("r_right"))
-                        & (F.col(lat) > F.col("r_bottom"))
-                        & (F.col(lat) < F.col("r_top"))
-                    )
-                )
-                .select(*out_cols)
-            )
-        if self._has_generic:
-            cand = (
-                sub.join(F.broadcast(self._boundary_gen), on=["pr", "cell"], how="inner")
-                .select(*out_cols)
-            )
-            parts.append(self._refine(cand, lon, lat))
-
-        if not parts:
-            raise ValueError("GeohashPipIndex produced no candidate tables")
-        result = parts[0]
-        for p in parts[1:]:
-            result = result.unionByName(p)
-        return result
-
-    def _refine(self, cand: DataFrame, lon: str, lat: str) -> DataFrame:
-        bc_geoms = self._bc_geoms
-        lon_name, lat_name = lon, lat
-        out_schema = cand.schema
-
-        def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cache: Dict[int, object] = {}
-
-            def poly_of(rid: int):
-                mp = cache.get(rid)
-                if mp is None:
-                    mp = unpack_multipolygon(bc_geoms.value[rid])
-                    cache[rid] = mp
-                return mp
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                keep = np.zeros(len(pdf), dtype=bool)
-                xs = pdf[lon_name].to_numpy(dtype=np.float64)
-                ys = pdf[lat_name].to_numpy(dtype=np.float64)
-                rids = pdf["region_id"].to_numpy()
-                for rid in pd.unique(rids):
-                    m = rids == rid
-                    keep[m] = points_strictly_inside_multi(xs[m], ys[m], poly_of(int(rid)))
-                out = pdf.loc[keep]
-                if len(out):
-                    yield out
-
-        return cand.mapInPandas(refine, schema=out_schema)
+        return self._join(pages_df, lon, lat, keep_cols, key_col)

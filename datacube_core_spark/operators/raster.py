@@ -100,8 +100,8 @@ def rasterize_generic_regions(
     size_y, size_x = grid.tile_size
     oy, ox = grid.origin
     # collect ALL blobs here (not index.geom_map): this kernel rasterizes
-    # rect regions too, and a distributed-classify index deliberately keeps
-    # only generic blobs driver-side
+    # rect regions too, and the index deliberately keeps only generic
+    # blobs driver-side
     geom_map = {
         int(r["region_id"]): bytes(r["geom"])
         for r in regions_df.select("region_id", "geom").collect()

@@ -9,59 +9,35 @@ candidate pass PostGIS' per-SRID GIST index performs in the reference
 (``datacube/drivers/postgis/_spatial.py:62-97``) expressed as a Spark
 broadcast equi-join on an integer key.
 
-Plan shape (mirrors PipIndex's single-scan tier discipline):
+The build, the tiered join and the refine are the covering-join core in
+``pip.py`` (``_CoveringIndex``); this module supplies the S2 pieces:
 
-1. big side: one Arrow-vectorized pass computes the LEAF cell id per
-   point (skipped when the caller provides a pre-keyed column), then
-   pure-Catalyst bit arithmetic derives the parent id at every active
-   covering level and explodes — no shuffle, no Python in the join path.
-2. ONE broadcast equi-join resolves every Catalyst-decidable candidate:
-   INTERIOR covering cells pass unconditionally (membership proven by
-   the join alone — their rect bound lies strictly inside the region)
-   and AXIS-RECT regions' boundary cells pass by strict bbox predicate
-   — no Python and no geometry blobs in either case.
-3. only GENERIC regions' boundary-band candidates pay a second scan +
-   the exact numpy strict-interior refine.
+* keyer: one Arrow-vectorized pass computes the LEAF cell id per point
+  (skipped when the caller provides a pre-keyed column);
+* ancestor: pure-Catalyst bit arithmetic derives the parent id at every
+  active covering level — no shuffle, no Python in the join path;
+* coverer: fixed-level ``s2_covering`` at an adaptively picked level, or
+  the mixed-level budgeted coverer.
 
-100-TB notes (PipIndex's discipline transplanted):
-
-* above ``DISTRIBUTED_COVER_THRESHOLD`` regions the covering itself is
-  computed on the EXECUTORS (one-off ``mapInPandas`` over the region
-  table) instead of a driver loop, and geometry blobs are pulled
-  driver-side ONLY for non-rect regions — driver memory scales with
-  |generic|, not |regions|.
-* the covering tables are geometry-bounded (per-region ~target_cells²
-  rows at an adaptively picked level) and are broadcast either way —
-  they are the small side of this join by definition.
-* the big side is scanned ONCE when every region is axis-rect, twice
-  when generic regions exist (their refine band) — against PipIndex's
-  three; this matters more here than there because each scan pays the
-  Arrow leaf-keying kernel (unless the caller pre-keys via
-  ``cell_col``).  All joins are AQE-friendly broadcast hash joins on
-  one long key.
+100-TB notes: the big side is scanned ONCE when every region is
+axis-rect, twice when generic regions exist (their refine band) —
+against PipIndex's three; this matters more here than there because
+each scan pays the Arrow leaf-keying kernel (unless the caller pre-keys
+via ``cell_col``).  All joins are AQE-friendly broadcast hash joins on
+one long key.
 """
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, List, Optional
+import functools
+from typing import Optional
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..geom.polygon import (
-    multipolygon_bbox,
-    points_strictly_inside_multi,
-    unpack_multipolygon,
-)
-from ..geom.s2 import MAX_LEVEL, lsb_for_level, with_s2_cell
-from ..geom.s2cover import (
-    pick_covering_level,
-    rect_parts,
-    s2_covering,
-    s2_covering_budgeted,
-)
+from ..geom.s2 import MAX_LEVEL, cell_level, lsb_for_level, with_s2_cell
+from ..geom.s2cover import pick_covering_level, s2_covering, s2_covering_budgeted
+from .pip import _LEAF, _CoveringIndex
 
 
 def parent_id_col(cell, level: int):
@@ -72,55 +48,24 @@ def parent_id_col(cell, level: int):
     return cell.bitwiseAND(F.lit(-lsb)).bitwiseOR(F.lit(lsb))
 
 
-def _rect_info(mp) -> tuple:
-    """(is_axis_rect, bbox): whole-region form of the shared
-    :func:`..geom.s2cover.rect_parts` rule — a single-part region whose
-    one ring is its bbox reduces strict-interior PIP to four float
-    compares.  Delegates so the rect rule cannot diverge from the
-    coverers'."""
-    l, b, r, t = multipolygon_bbox(mp)
-    parts = rect_parts(mp)
-    is_rect = len(parts) == 1 and parts[0][2]
-    return is_rect, (float(l), float(b), float(r), float(t))
-
-
-_COV_SCHEMA = (
-    "region_id INT, lv INT, cell LONG, interior BOOLEAN, rect BOOLEAN, "
-    "r_left DOUBLE, r_bottom DOUBLE, r_right DOUBLE, r_top DOUBLE"
-)
-
-
-def _cover_rows(rid: int, blob: bytes, target: int, level: Optional[int],
-                max_cells: Optional[int] = None):
-    mp = unpack_multipolygon(blob)
+def _s2_cover(target: int, level: Optional[int], max_cells: Optional[int], mp):
     if max_cells is not None:
         # mixed-level budgeted covering (S2RegionCoverer shape): ids
         # carry their own levels; the join explodes per DISTINCT level
-        from ..geom.s2 import cell_level
-
         ids, interior = s2_covering_budgeted(mp, max_cells=max_cells)
-        lvs = cell_level(ids)
-        is_rect, (l, b, r, t) = _rect_info(mp)
-        return [
-            (int(rid), int(lv_), int(c), bool(i), is_rect, l, b, r, t)
-            for c, i, lv_ in zip(ids.tolist(), interior.tolist(), lvs.tolist())
-        ]
+        return cell_level(ids).tolist(), ids.tolist(), interior.tolist()
     lv = level if level is not None else pick_covering_level(mp, target)
     ids, interior = s2_covering(mp, lv)
-    is_rect, (l, b, r, t) = _rect_info(mp)
-    return [
-        (int(rid), int(lv), int(c), bool(i), is_rect, l, b, r, t)
-        for c, i in zip(ids.tolist(), interior.tolist())
-    ]
+    return [lv] * len(ids), ids.tolist(), interior.tolist()
 
 
-class S2PipIndex:
+class S2PipIndex(_CoveringIndex):
     """Build-once S2 covering index of a region table.
 
     ``regions_df`` must carry ``region_id`` and a packed-multipolygon
-    ``geom`` column (same contract as PipIndex).  Below
-    ``DISTRIBUTED_COVER_THRESHOLD`` regions the covering is built in a
-    driver loop; above it, on the executors (see module docstring).
+    ``geom`` column (same contract as PipIndex).  The covering is built in
+    a driver loop for small region tables and on the executors above the
+    shared build threshold (``distributed_cover`` forces either mode).
 
     ``max_cells`` switches per-region coverings to the MIXED-LEVEL
     budgeted coverer (``s2_covering_budgeted`` — the S2RegionCoverer
@@ -129,7 +74,7 @@ class S2PipIndex:
     explode fan-out for a smaller broadcast.
     """
 
-    DISTRIBUTED_COVER_THRESHOLD = 10_000
+    _KEY_TYPE = "LONG"
 
     def __init__(
         self,
@@ -140,86 +85,14 @@ class S2PipIndex:
         distributed_cover: Optional[bool] = None,
         max_cells: Optional[int] = None,
     ):
-        if distributed_cover is None:
-            # limit-probe, not a full count (PipIndex's rule): deciding
-            # the build mode of a 10^6-region table must not scan it
-            thresh = self.DISTRIBUTED_COVER_THRESHOLD
-            distributed_cover = (
-                regions_df.select(F.lit(1)).limit(thresh + 1).count() > thresh
-            )
+        cover = functools.partial(_s2_cover, int(target_cells_per_axis), level, max_cells)
+        self._build(spark, regions_df, cover, distributed_cover)
 
-        target = int(target_cells_per_axis)
-        if distributed_cover:
-            def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                cols = [
-                    "region_id", "lv", "cell", "interior", "rect",
-                    "r_left", "r_bottom", "r_right", "r_top",
-                ]
-                for pdf in batches:
-                    rows: List[tuple] = []
-                    for rid, blob in zip(pdf["region_id"], pdf["geom"]):
-                        rows.extend(_cover_rows(int(rid), bytes(blob), target, level, max_cells))
-                    if rows:
-                        yield pd.DataFrame(rows, columns=cols)
+    def _with_leaf(self, df: DataFrame, lon: str, lat: str) -> DataFrame:
+        return with_s2_cell(df, level=MAX_LEVEL, lon_col=lon, lat_col=lat, out_col=_LEAF)
 
-            cov = (
-                regions_df.select("region_id", "geom")
-                .mapInPandas(kernel, schema=_COV_SCHEMA)
-                .localCheckpoint(eager=True)  # one-off build job
-            )
-            # geometry blobs driver-side ONLY for non-rect regions — the
-            # numpy refine's working set; rect regions' WKB never leaves
-            # the executors (driver memory scales with |generic|)
-            gid = cov.where(~F.col("rect") & ~F.col("interior")).select("region_id").distinct()
-            collected = (
-                regions_df.join(F.broadcast(gid), on="region_id", how="left_semi")
-                .select("region_id", "geom")
-                .collect()
-            )
-            self.geom_map: Dict[int, bytes] = {
-                int(r["region_id"]): bytes(r["geom"]) for r in collected
-            }
-        else:
-            rows = regions_df.select("region_id", "geom").collect()
-            cov_rows: List[tuple] = []
-            self.geom_map = {}
-            for r in sorted(rows, key=lambda r: r["region_id"]):
-                rid, blob = int(r["region_id"]), bytes(r["geom"])
-                part = _cover_rows(rid, blob, target, level, max_cells)
-                cov_rows.extend(part)
-                if part and not part[0][4]:  # non-rect → refine needs the blob
-                    self.geom_map[rid] = blob
-            if not cov_rows:
-                raise ValueError("S2PipIndex built from an empty region table")
-            cov = spark.createDataFrame(cov_rows, _COV_SCHEMA)
-
-        # one build-time job yields the active levels AND which tiers are
-        # populated — join() must not re-probe per call (it runs on the
-        # hot query path, warm-benchmarked; these facts are build-time
-        # constants of the covering)
-        tier_rows = cov.groupBy("lv").agg(
-            F.max((F.col("interior") | F.col("rect")).cast("int")).alias("cat"),
-            F.max((~F.col("interior") & ~F.col("rect")).cast("int")).alias("gen"),
-        ).collect()
-        self.levels = sorted(int(r["lv"]) for r in tier_rows)
-        self._has_catalyst = any(r["cat"] for r in tier_rows)
-        self._has_generic = any(r["gen"] for r in tier_rows)
-        if not self.levels:
-            raise ValueError("S2PipIndex built from an empty region table")
-        # Catalyst-resolvable candidates (interior cells + rect-region
-        # boundary cells) share ONE broadcast table: interior rows pass
-        # unconditionally, rect-boundary rows by strict bbox predicate —
-        # a single keep-filter, so the big side is scanned ONCE for both
-        # tiers (the S2 leaf-keying Arrow pass is the per-scan cost here,
-        # unlike PipIndex's cheap subcell arithmetic)
-        self._catalyst = cov.where(F.col("interior") | F.col("rect")).select(
-            "lv", "cell", "region_id", "interior",
-            "r_left", "r_bottom", "r_right", "r_top",
-        )
-        self._boundary_gen = cov.where(~F.col("interior") & ~F.col("rect")).select(
-            "lv", "cell", "region_id"
-        )
-        self._bc_geoms = spark.sparkContext.broadcast(self.geom_map)
+    def _ancestor(self, leaf, level: int):
+        return parent_id_col(leaf, level)
 
     def join(
         self,
@@ -237,96 +110,4 @@ class S2PipIndex:
         the external-table interop case where points arrive keyed; when
         omitted the leaf id is computed from lon/lat in one Arrow pass.
         """
-        base_cols = keep_cols if keep_cols is not None else [
-            c for c in pages_df.columns if c not in (lon, lat, cell_col)
-        ]
-        out_cols = [*base_cols, lon, lat, "region_id"]
-
-        if cell_col is None:
-            keyed = with_s2_cell(
-                pages_df.select(*base_cols, lon, lat),
-                level=MAX_LEVEL, lon_col=lon, lat_col=lat, out_col="__s2_leaf",
-            )
-        else:
-            keyed = pages_df.select(*base_cols, lon, lat, F.col(cell_col).alias("__s2_leaf"))
-        if self._has_catalyst and self._has_generic:
-            # both tiers consume the keyed big side — materialize it once
-            # so the Arrow leaf-keying pass (and the caller's derivation)
-            # does not run per tier (guide §2.4/§5)
-            keyed = keyed.localCheckpoint(eager=False)
-        leaf = F.col("__s2_leaf")
-
-        # per-level parents in ONE pass (array+explode, pipelined)
-        elems = [
-            F.struct(F.lit(lv).alias("lv"), parent_id_col(leaf, lv).alias("cell"))
-            for lv in self.levels
-        ]
-        sub = (
-            keyed.withColumn("__s2_p", F.explode(F.array(*elems)))
-            .select(*base_cols, lon, lat, "__s2_p.lv", "__s2_p.cell")
-        )
-
-        parts: List[DataFrame] = []
-        # interior + rect-boundary tiers in ONE scan: interior rows pass
-        # unconditionally, rect rows by strict bbox predicate
-        if self._has_catalyst:
-            parts.append(
-                sub.join(F.broadcast(self._catalyst), on=["lv", "cell"], how="inner")
-                .where(
-                    F.col("interior")
-                    | (
-                        (F.col(lon) > F.col("r_left"))
-                        & (F.col(lon) < F.col("r_right"))
-                        & (F.col(lat) > F.col("r_bottom"))
-                        & (F.col(lat) < F.col("r_top"))
-                    )
-                )
-                .select(*out_cols)
-            )
-        # generic-region boundary tier: exact numpy strict-interior refine
-        if self._has_generic:
-            cand = (
-                sub.join(F.broadcast(self._boundary_gen), on=["lv", "cell"], how="inner")
-                .select(*out_cols)
-            )
-            parts.append(self._refine(cand, lon, lat))
-
-        if not parts:
-            raise ValueError("S2PipIndex produced no candidate tables")
-        result = parts[0]
-        for p in parts[1:]:
-            result = result.unionByName(p)
-        return result
-
-    def _refine(self, cand: DataFrame, lon: str, lat: str) -> DataFrame:
-        """Exact strict-interior PIP over the generic-region boundary
-        band (same kernel discipline as ``PipIndex._refine``)."""
-        bc_geoms = self._bc_geoms
-        lon_name, lat_name = lon, lat
-        out_schema = cand.schema
-
-        def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cache: Dict[int, object] = {}
-
-            def poly_of(rid: int):
-                mp = cache.get(rid)
-                if mp is None:
-                    mp = unpack_multipolygon(bc_geoms.value[rid])
-                    cache[rid] = mp
-                return mp
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                keep = np.zeros(len(pdf), dtype=bool)
-                xs = pdf[lon_name].to_numpy(dtype=np.float64)
-                ys = pdf[lat_name].to_numpy(dtype=np.float64)
-                rids = pdf["region_id"].to_numpy()
-                for rid in pd.unique(rids):
-                    m = rids == rid
-                    keep[m] = points_strictly_inside_multi(xs[m], ys[m], poly_of(int(rid)))
-                out = pdf.loc[keep]
-                if len(out):
-                    yield out
-
-        return cand.mapInPandas(refine, schema=out_schema)
+        return self._join(pages_df, lon, lat, keep_cols, cell_col)

@@ -3,9 +3,10 @@
 Two flavors:
 
 * :func:`regions` — the oracle-checkable patchwork: a deterministic
-  RX × RY rectangular grid covering (-180,180) × (-85,85).  The engine
-  treats these as *generic packed polygons* (it never exploits
-  rectangularity); the DuckDB oracle can express the same join as strict
+  RX × RY rectangular grid covering (-180,180) × (-85,85), shipped as
+  ordinary packed polygons.  Every PIP index detects axis-rect regions
+  from the geometry itself and refines them by strict bbox compares in
+  Catalyst; the DuckDB oracle expresses the same join as strict
   ``BETWEEN`` arithmetic, giving row-for-row verification of the whole
   candidate-join + refine pipeline.
 

@@ -239,13 +239,13 @@ def test_pip_index_distributed_classify_parity(spark):
     out_x = {tuple(r) for r in idx_x.join(p, keep_cols=["doc_id"]).select("doc_id", "region_id").collect()}
     assert out_d == out_x and len(out_d) > 0
 
-    # driver-side geometry bytes scale with |generic|, not |regions|: the
-    # distributed index holds ONLY the generic (tier-3) blobs; the rect
-    # patchwork's WKB never reaches the driver
+    # driver-side geometry bytes scale with |generic|, not |regions|: both
+    # build modes hold ONLY the generic (tier-3) blobs; the rect
+    # patchwork's WKB is never kept driver-side
     generic_ids = set(idx_d._bc_geoms.value.keys())  # classifier's verdict
     assert generic_ids and generic_ids <= {1000 + i for i in range(len(extra))}
     assert set(idx_x.geom_map) == generic_ids
-    assert set(idx_d.geom_map) == {int(r["region_id"]) for r in regs.collect()}
+    assert set(idx_d.geom_map) == generic_ids
 
 
 def test_pip_index_driver_bytes_scale_with_generic(spark):
@@ -283,11 +283,12 @@ def test_pip_index_driver_bytes_scale_with_generic(spark):
     assert set(idx.geom_map) == set(idx._bc_geoms.value.keys() if idx._bc_geoms else [])
 
 
-def test_pip_single_scan_matches_per_level_and_reads_less(spark):
-    """single_scan=True (default, PERF.md §13: 1.7-2x at sf0.1) must be
-    row-identical to the scan-per-level plan, and its physical plan must
-    read the big parquet side at most 3x (rect tier + full join + boundary
-    join) instead of 1 + 2·|levels| times."""
+def test_pip_single_scan_matches_per_level_and_reads_less(spark, pages_pdf):
+    """The single-scan lattice plan (PERF.md §13: 1.7-2x at sf0.1 over
+    the retired scan-per-level plan) must match the pure-python oracle on
+    shapes spanning several lattice levels, and its physical plan must
+    read the big parquet side at most 3x (rect tier + full join +
+    boundary join) instead of 1 + 2·|levels| times."""
     from datacube_core_spark.operators.pip import PipIndex
     from datacube_core_spark.sources.regions import regions_complex
 
@@ -304,22 +305,20 @@ def test_pip_single_scan_matches_per_level_and_reads_less(spark):
     assert len(idx.levels) >= 2, "fixture must span multiple lattice levels"
 
     p = pages(spark, SF_TINY).select("doc_id", "lon", "lat")
-    a = idx.join(p, keep_cols=["doc_id"], single_scan=True)
-    b = idx.join(p, keep_cols=["doc_id"], single_scan=False)
-    sa = {(r["doc_id"], r["region_id"]) for r in a.collect()}
-    sb = {(r["doc_id"], r["region_id"]) for r in b.collect()}
-    assert sa == sb and sa
+    a = idx.join(p, keep_cols=["doc_id"])
+    got = {(int(r["doc_id"]), int(r["region_id"])) for r in a.collect()}
 
-    def scans(df):
-        # AQE prints the plan twice (current + "== Initial Plan =="):
-        # count only the current section
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return plan.split("== Initial Plan ==")[0].count("Scan parquet")
+    xs, ys, ids = pages_pdf.lon.to_numpy(), pages_pdf.lat.to_numpy(), pages_pdf.doc_id.to_numpy()
+    exp = set()
+    for i, (name, mp) in enumerate(shapes):
+        inside = points_strictly_inside_multi(xs, ys, mp)
+        exp.update((int(d), i) for d in ids[inside])
+    assert got == exp and got
 
-    n_levels = len(idx.levels)
-    assert scans(a) <= 3
-    assert scans(b) >= 2 * n_levels  # the plan single_scan replaces
-    assert scans(a) < scans(b)
+    # AQE prints the plan twice (current + "== Initial Plan =="): count
+    # only the current section
+    plan = a._jdf.queryExecution().executedPlan().toString()
+    assert plan.split("== Initial Plan ==")[0].count("Scan parquet") <= 3
 
 
 def test_ivf_topk_recall_and_plan(spark):
@@ -386,14 +385,17 @@ def test_knn_zero_candidate_query_emits_marker(spark):
     assert far.doc_id.isna().all() and far.dist_sq.isna().all()
 
 
-def test_pip_single_scan_tolerates_reserved_column_names(spark):
-    """Review-pass-2 finding: a pages table that already carries a
-    `level`/`sc_x` column must not collide with the single-scan plan's
-    internal join keys (now __pip_-prefixed)."""
+@pytest.fixture(scope="module")
+def reserved_indexes(spark):
+    """The three PIP indexes over one rect plus two generic shapes, so
+    every tier of every index runs, each with its (doc_id, region_id)
+    pairs on a pages table without passenger columns."""
+    from datacube_core_spark.geom.polygon import box_ring
+    from datacube_core_spark.operators.ghpip import GeohashPipIndex
     from datacube_core_spark.operators.pip import PipIndex
-    from datacube_core_spark.sources.regions import regions_complex
+    from datacube_core_spark.operators.s2pip import S2PipIndex
 
-    shapes = sorted(regions_complex().items())[:2]
+    shapes = [("box", [[box_ring(-60.0, -30.0, 60.0, 30.0)]]), *sorted(regions_complex().items())[:2]]
     rows = [
         (i, name, 0.0, 0.0, 0.0, 0.0, bytearray(pack_multipolygon(mp)))
         for i, (name, mp) in enumerate(shapes)
@@ -401,17 +403,30 @@ def test_pip_single_scan_tolerates_reserved_column_names(spark):
     regs = spark.createDataFrame(
         rows, "region_id INT, name STRING, left DOUBLE, bottom DOUBLE, right DOUBLE, top DOUBLE, geom BINARY"
     )
-    idx = PipIndex(spark, regs, GRID_PAGES)
-    p = (
-        pages(spark, SF_TINY)
-        .select("doc_id", "lon", "lat")
-        .withColumn("level", F.lit(7))      # adversarial passenger columns
-        .withColumn("sc_x", F.lit(-1))
-    )
-    out = idx.join(p, keep_cols=["doc_id", "level", "sc_x"], single_scan=True)
+    p = pages(spark, SF_TINY).select("doc_id", "lon", "lat")
+    out = {}
+    for kind, idx in (
+        ("pip", PipIndex(spark, regs, GRID_PAGES)),
+        ("s2pip", S2PipIndex(spark, regs)),
+        ("ghpip", GeohashPipIndex(spark, regs)),
+    ):
+        out[kind] = idx, {(r["doc_id"], r["region_id"]) for r in idx.join(p, keep_cols=["doc_id"]).collect()}
+    return out
+
+
+@pytest.mark.parametrize("name", ["cell", "lv", "pr", "interior", "r_left", "tile_x", "level", "sc_x"])
+@pytest.mark.parametrize("kind", ["pip", "s2pip", "ghpip"])
+def test_pip_single_scan_tolerates_reserved_column_names(spark, reserved_indexes, kind, name):
+    """A kept pages column named like an index's internal join column
+    (cell key, level, interior flag, bbox, tile id, subcell id) must
+    neither collide (AMBIGUOUS_REFERENCE) nor be overwritten: every index
+    prefixes its internal columns with __pip_."""
+    idx, want = reserved_indexes[kind]
+    p = pages(spark, SF_TINY).select("doc_id", "lon", "lat")
+    out = idx.join(p.withColumn(name, F.lit(-1)), keep_cols=["doc_id", name])  # adversarial passenger
     rows_out = out.collect()
-    assert len(rows_out) > 0
-    assert all(r["level"] == 7 and r["sc_x"] == -1 for r in rows_out)
+    assert {(r["doc_id"], r["region_id"]) for r in rows_out} == want and want
+    assert all(r[name] == -1 for r in rows_out)
 
 
 def test_semdedup_drop_rule_and_plan(spark):

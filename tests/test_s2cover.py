@@ -236,15 +236,19 @@ def test_s2pip_plan_is_broadcast_no_python_join(spark):
     assert "BatchEvalPython" not in depythoned
 
 
-def test_s2pip_distributed_cover_matches_driver(spark):
+@pytest.mark.parametrize("index_cls", ["S2PipIndex", "GeohashPipIndex"])
+def test_s2pip_distributed_cover_matches_driver(spark, index_cls):
     """Forcing the executor-side covering build (distributed_cover=True)
     must give row-identical joins to the driver-loop build, and pull NO
-    rect-region geometry blobs to the driver."""
+    rect-region geometry blobs to the driver — for both covering
+    indexes."""
+    from datacube_core_spark.operators.ghpip import GeohashPipIndex
     from datacube_core_spark.operators.s2pip import S2PipIndex
     from datacube_core_spark.sources.pages import pages
 
     from .conftest import SF_TINY
 
+    cls = {"S2PipIndex": S2PipIndex, "GeohashPipIndex": GeohashPipIndex}[index_cls]
     specs = [
         (0, [[box_ring(10.0, 20.0, 25.0, 37.0)]]),      # rect
         (1, [[box_ring(0.0, 0.0, 10.0, 10.0), box_ring(4.0, 4.0, 6.0, 6.0)]]),  # donut
@@ -253,8 +257,10 @@ def test_s2pip_distributed_cover_matches_driver(spark):
     regs = _region_df(spark, specs)
     p = pages(spark, SF_TINY, repl=2).select("doc_id", "lon", "lat")
 
-    drv = S2PipIndex(spark, regs, distributed_cover=False)
-    dst = S2PipIndex(spark, regs, distributed_cover=True)
+    drv = cls(spark, regs, distributed_cover=False)
+    dst = cls(spark, regs, distributed_cover=True)
+    assert drv.levels == dst.levels
+    assert (drv._has_catalyst, drv._has_generic) == (dst._has_catalyst, dst._has_generic) == (True, True)
     a = {tuple(r) for r in drv.join(p, keep_cols=["doc_id"]).select("doc_id", "region_id").collect()}
     b = {tuple(r) for r in dst.join(p, keep_cols=["doc_id"]).select("doc_id", "region_id").collect()}
     assert a == b and len(a) > 0
@@ -378,10 +384,10 @@ def test_rect_parts_shared_rule():
     drift — a part classified rect passes the PIP join by bbox predicate
     ALONE downstream, so divergence silently corrupts join rows.  The
     rule now lives in one place; pin its semantics: an axis-aligned
-    single-ring box IS rect, a diamond / holed part is NOT, and s2pip's
-    whole-region form delegates to it."""
+    single-ring box IS rect, a diamond / holed part is NOT, and the
+    covering indexes' whole-region form delegates to it."""
     from datacube_core_spark.geom.s2cover import rect_parts
-    from datacube_core_spark.operators.s2pip import _rect_info
+    from datacube_core_spark.operators.pip import _rect_info
 
     box = [[box_ring(0.0, 0.0, 10.0, 5.0)]]
     diamond = [[np.array([(5.0, 0.0), (10.0, 5.0), (5.0, 10.0), (0.0, 5.0)], dtype=float)]]
