@@ -15,6 +15,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datacube_core_spark.frames import local_frame
 from datacube_core_spark.geom import GRID_PAGES
 from datacube_core_spark.geom.lonlat import chop_along_antimeridian
 from datacube_core_spark.geom.polygon import box_ring, pack_multipolygon
@@ -53,7 +54,8 @@ def _dateline_regions(spark: SparkSession, region_id: int) -> DataFrame:
     """One-row region table: the extended-longitude footprint 170..190
     chopped along ±180 into a two-part multipolygon."""
     chopped = chop_along_antimeridian([[box_ring(170.0, -20.0, 190.0, 25.0)]])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(region_id, "dateline", -180.0, -20.0, 180.0, 25.0, bytearray(pack_multipolygon(chopped)))],
         "region_id INT, name STRING, left DOUBLE, bottom DOUBLE, right DOUBLE, top DOUBLE, geom BINARY",
     )
@@ -222,7 +224,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(
         # a benchmark item that IS the planted boilerplate: every 7th doc
         # contaminates it — the cross-doc positive path
-        spark.createDataFrame([(-1, _BOILER)], "bench_id LONG, text STRING")
+        local_frame(spark, [(-1, _BOILER)], "bench_id LONG, text STRING")
     )
     return contamination_pairs(docs, bench, n=13, min_hits=3)
 
@@ -1892,7 +1894,7 @@ def q_raster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datacube_core_spark.operators.raster import rasterize_rect_regions, sample_rasters
 
     p = pages(spark, sf_dir, repl=Q_REPL).select("doc_id", "lon", "lat")
-    rasters = rasterize_rect_regions(regions(spark), _G, res=1.0)
+    rasters = rasterize_rect_regions(regions(spark), _G, res=1.0, index=_pip_index(spark))
     out = sample_rasters(p, rasters, _G, res=1.0)
     return out.select("doc_id", "region_id", F.col("value").cast("int").alias("value"))
 
@@ -1913,7 +1915,7 @@ def q_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     regs = regions(spark)
-    src = rasterize_rect_regions(regs, _G, res=1.0)
+    src = rasterize_rect_regions(regs, _G, res=1.0, index=_pip_index(spark))
     cand = merc_region_tiles(regs, GRID_MERC)
     warped = warp_rasters_to_grid(src, _G, 1.0, GRID_MERC, 256_000.0, cand, "nearest")
     p = (

@@ -94,6 +94,7 @@ def main(argv=None) -> int:
 
     from pyspark.sql import functions as F
 
+    from .frames import local_frame
     from .geom import GRID_PAGES
     from .operators.pip import PipIndex
     from .operators.tiling import with_tile
@@ -133,7 +134,7 @@ def main(argv=None) -> int:
         job = CheckpointedJob(spark, args.state_dir)
 
         def process(batch):
-            batch_df = spark.createDataFrame(batch, "tile_x INT, tile_y INT")
+            batch_df = local_frame(spark, batch, "tile_x INT, tile_y INT")
             sub = tiled.join(F.broadcast(batch_df), on=["tile_x", "tile_y"], how="left_semi")
             out = index.join(sub, keep_cols=["doc_id", "tile_x", "tile_y"]).groupBy(
                 F.col("tile_x").alias("cell_x"), F.col("tile_y").alias("cell_y"), "region_id"

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .frames import local_frame
 from .geom.grid import GRID_PAGES, GridSpec
 from .operators.grouping import group_datasets, solar_day_col
 from .operators.tiling import point_tile_cols, tile_bounds_cols, with_tile
@@ -54,7 +55,8 @@ class Datacube:
             [float(x) for x in self.grid.tile_size],   # grids may carry ints
             [float(x) for x in self.grid.resolution],
         )]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "name STRING, n_measurements INT, crs STRING, "
             "tile_size ARRAY<DOUBLE>, resolution ARRAY<DOUBLE>",
@@ -72,7 +74,8 @@ class Datacube:
              m.units, list(m.aliases))
             for m in PAGES_PRODUCT.measurements
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "product STRING, measurement STRING, dtype STRING, nodata DOUBLE, "
             "units STRING, aliases ARRAY<STRING>",

@@ -45,6 +45,8 @@ from typing import Callable, List, Optional, Tuple
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
+
 CHECKPOINT_SCHEMA = (
     "cell_x INT, cell_y INT, job_id STRING, batch_id STRING, status STRING, "
     "attempt INT, rows LONG, secs DOUBLE, ts TIMESTAMP"
@@ -79,7 +81,7 @@ class CheckpointedJob:
     def _read(self, path: str, schema: str) -> DataFrame:
         if _has_parquet(path):
             return self.spark.read.schema(schema).parquet(path)
-        return self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, [], schema)
 
     def checkpoints(self) -> DataFrame:
         return self._read(self.ckpt_path, CHECKPOINT_SCHEMA)
@@ -113,7 +115,7 @@ class CheckpointedJob:
         batch_id) shape.
         """
         if not _has_parquet(self.output_path):
-            return self.spark.createDataFrame([], schema or "cell_x INT, cell_y INT, batch_id STRING")
+            return local_frame(self.spark, [], schema or "cell_x INT, cell_y INT, batch_id STRING")
         out = self.spark.read.parquet(self.output_path)
         return out.join(F.broadcast(self.committed_batches()), on="batch_id", how="left_semi")
 
@@ -211,7 +213,8 @@ class CheckpointedJob:
                 (cx, cy, self.job_id, batch_id, "done", 1, n_rows, float(secs)) for cx, cy in batch
             ]
             (
-                self.spark.createDataFrame(
+                local_frame(
+                    self.spark,
                     ckpt_rows,
                     "cell_x INT, cell_y INT, job_id STRING, batch_id STRING, status STRING, "
                     "attempt INT, rows LONG, secs DOUBLE",
@@ -222,14 +225,16 @@ class CheckpointedJob:
             )
             lin_rows = [(cx, cy, self.job_id, n_inputs, 0, n_inputs) for cx, cy in batch]
             (
-                self.spark.createDataFrame(lin_rows, LINEAGE_SCHEMA)
+                local_frame(self.spark, lin_rows, LINEAGE_SCHEMA)
                 .write.mode("append")
                 .parquet(self.lineage_path)
             )
             met_rows = [(self.job_id, "process_batch", cx, cy, n_rows, float(secs)) for cx, cy in batch]
             (
-                self.spark.createDataFrame(
-                    met_rows, "job_id STRING, stage STRING, cell_x INT, cell_y INT, rows LONG, secs DOUBLE"
+                local_frame(
+                    self.spark,
+                    met_rows,
+                    "job_id STRING, stage STRING, cell_x INT, cell_y INT, rows LONG, secs DOUBLE",
                 )
                 .withColumn("ts", now)
                 .write.mode("append")

@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..geom.affine import Affine
 from ..geom.lonlat import lonlat_bounds
 from ..geom.mercator import EPSG_4326, _norm_crs, get_transformer
@@ -572,7 +573,7 @@ class Doc2Dataset:
                 F.col(self.store.id_col).cast("string").alias("source_id")
             )
         except ValueError:  # empty store
-            known = resolved.sparkSession.createDataFrame([], "source_id STRING")
+            known = local_frame(resolved.sparkSession, [], "source_id STRING")
         missing = (
             resolved.where(F.col("error").isNull())
             .select("id", F.explode("source_ids").alias("source_id"))

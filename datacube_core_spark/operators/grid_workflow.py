@@ -31,6 +31,7 @@ from typing import Optional, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..geom.grid import GridSpec
 from .grouping import group_datasets
 from .tiling import explode_bbox_tiles, tile_bounds_cols
@@ -91,7 +92,7 @@ def cell_observations(
 def query_polygon_tiles_df(spark, grid: GridSpec, polygon) -> DataFrame:
     """Driver-side tile enumeration of the query polygon (semi-join set)."""
     rows = [(int(tx), int(ty)) for (tx, ty), _ in grid.tiles_from_geopolygon(polygon)]
-    return spark.createDataFrame(rows, "tile_x INT, tile_y INT")
+    return local_frame(spark, rows, "tile_x INT, tile_y INT")
 
 
 def list_cells(

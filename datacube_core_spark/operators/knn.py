@@ -25,6 +25,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..geom.grid import GridSpec
 from .tiling import _axis_index, point_tile_cols
 
@@ -32,7 +33,7 @@ from .tiling import _axis_index, point_tile_cols
 def _ring_offsets(spark, r: int) -> DataFrame:
     """All (dx, dy) with Chebyshev norm ≤ r."""
     offs = [(dx, dy) for dx in range(-r, r + 1) for dy in range(-r, r + 1)]
-    return spark.createDataFrame(offs, "dx INT, dy INT")
+    return local_frame(spark, offs, "dx INT, dy INT")
 
 
 # ---------------------------------------------------------------------------
@@ -316,7 +317,7 @@ def _subcell_local_pass(
     step_y = float(size_y_t) / s_split
     guard_sq = float(min(abs(step_x), abs(step_y))) ** 2
 
-    big_df = spark.createDataFrame(sorted(big), "dtx INT, dty INT")
+    big_df = local_frame(spark, sorted(big), "dtx INT, dty INT")
     q_big = pending.join(
         F.broadcast(big_df),
         on=[pending["qtx"] == big_df["dtx"], pending["qty"] == big_df["dty"]],
@@ -348,7 +349,7 @@ def _subcell_local_pass(
     halo_rows = sorted(
         {(dtx + dx, dty + dy) for dtx, dty in big for dx in (-1, 0, 1) for dy in (-1, 0, 1)}
     )
-    halo_map = spark.createDataFrame(halo_rows, "ptx INT, pty INT")
+    halo_map = local_frame(spark, halo_rows, "ptx INT, pty INT")
     pgx = _axis_index(F.col("lon"), ox, step_x)
     pgy = _axis_index(F.col("lat"), oy, step_y)
     p_sub = (
@@ -520,7 +521,7 @@ def knn_join(
             big = [t for t in dense if rnp[t] > local_max_halo_pages]
             big_set = set(big)
             small = [t for t in dense if t not in big_set]
-            dense_df = spark.createDataFrame(sorted(dense), "dtx INT, dty INT")
+            dense_df = local_frame(spark, sorted(dense), "dtx INT, dty INT")
             locs = []
 
             if small:
@@ -539,10 +540,8 @@ def knn_join(
                 halo_rows = sorted(
                     {(dtx, dty, dtx + dx, dty + dy) for dtx, dty in small for dx, dy in ring0}
                 )
-                halo_map = spark.createDataFrame(
-                    halo_rows, "dtx INT, dty INT, ptx INT, pty INT"
-                )
-                small_df = spark.createDataFrame(sorted(small), "dtx INT, dty INT")
+                halo_map = local_frame(spark, halo_rows, "dtx INT, dty INT, ptx INT, pty INT")
+                small_df = local_frame(spark, sorted(small), "dtx INT, dty INT")
 
                 q_part = (
                     pending.join(

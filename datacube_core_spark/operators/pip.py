@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..geom.classify import classify_subcells, detect_axis_rect
 from ..geom.grid import GridSpec
 from ..geom.polygon import multipolygon_bbox, points_strictly_inside_multi, unpack_multipolygon
@@ -102,7 +103,7 @@ def _build_table(
                 geom_map[rid] = blob
         at = [cols.index(c) for c in tier_cols]
         tiers = {tuple(row[i] for i in at) for row in rows}
-        table = spark.createDataFrame(rows, schema)
+        table = local_frame(spark, rows, schema)
     else:
         def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:

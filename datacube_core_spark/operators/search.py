@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
+
 K1 = 1.2
 B = 0.75
 
@@ -65,9 +67,7 @@ def bm25_topk(
     tf, lens = term_stats(docs, id_col, text_col)
     id_type = dict(docs.dtypes)[id_col]
     if docs.limit(1).count() == 0:
-        return docs.sparkSession.createDataFrame(
-            [], f"doc_id {id_type}, score_micro LONG, rank INT"
-        )
+        return local_frame(docs.sparkSession, [], f"doc_id {id_type}, score_micro LONG, rank INT")
     # corpus constants collected driver-side (two scalar rows — a
     # bounded driver decision, like the salt histograms): avglen from an
     # EXACT integer token sum, then ONE float division — F.avg would sum

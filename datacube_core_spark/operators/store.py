@@ -39,6 +39,8 @@ from typing import Iterable, Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
+
 OPS = ("add", "update", "archive", "restore", "purge")
 
 
@@ -323,7 +325,7 @@ class DatasetStore:
 
     def _ids_df(self, ids: Iterable) -> DataFrame:
         rows = [(i,) for i in ids]
-        return self.spark.createDataFrame(rows, f"{self.id_col} {self.id_type}")
+        return local_frame(self.spark, rows, f"{self.id_col} {self.id_type}")
 
     def _state(self, as_of: Optional[int] = None, committed_only: bool = True) -> Optional[DataFrame]:
         """Last event per id (purge events included); ``as_of`` rewinds to
@@ -707,7 +709,7 @@ def add_named_documents(spark, store: "DatasetStore", docs_by_name, update_exist
     path (the ``datacube product update`` analog).  ``docs_by_name``:
     {name: serialized definition} — validation happens in the caller."""
     rows = sorted(docs_by_name.items())
-    df = spark.createDataFrame(rows, f"{store.id_col} STRING, definition STRING")
+    df = local_frame(spark, rows, f"{store.id_col} STRING, definition STRING")
     if not update_existing:
         return store.add(df, skip_existing=True)
     try:

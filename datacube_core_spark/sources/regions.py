@@ -25,6 +25,7 @@ from typing import Dict, List, Tuple
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+from ..frames import local_frame
 from ..geom.polygon import MultiPolygon, box_ring, pack_multipolygon
 
 RX, RY = 24, 10  # 15° x 17° cells over (-180,180) x (-85,85)
@@ -57,7 +58,8 @@ def regions(spark: SparkSession) -> DataFrame:
     for rid, mp in region_multipolygons().items():
         l, b, r, t = region_bounds(rid)
         rows.append((rid, f"R{rid:04d}", float(l), float(b), float(r), float(t), bytearray(pack_multipolygon(mp))))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "region_id INT, name STRING, left DOUBLE, bottom DOUBLE, right DOUBLE, top DOUBLE, geom BINARY",
     )

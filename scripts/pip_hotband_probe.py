@@ -38,6 +38,7 @@ def main() -> None:
     import statistics
 
     import __spark_entry__ as entry
+    from datacube_core_spark.frames import local_frame
     from datacube_core_spark.geom.polygon import pack_multipolygon
     from datacube_core_spark.operators.pip import PipIndex
     from datacube_core_spark.session import get_spark
@@ -78,7 +79,7 @@ def main() -> None:
               "right DOUBLE, top DOUBLE, geom BINARY")
 
     def timed_join(rows):
-        rdf = spark.createDataFrame(rows, schema)
+        rdf = local_frame(spark, rows, schema)
         idx = PipIndex(spark, rdf, G)
         out = idx.join(p, keep_cols=["doc_id"])
         n = out.count()  # warm-up / build
