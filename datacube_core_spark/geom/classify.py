@@ -1,26 +1,23 @@
-"""Driver-side geometry classification for JVM-pushdown PIP joins.
+"""Driver-side subcell classification for JVM-pushdown PIP joins.
 
-Two tools that let the engine keep point-in-polygon evaluation out of
-Python for the vast majority of rows (the Arrow JVM↔Python boundary is a
-hard throughput ceiling — measured ~4M rows/s in this sandbox regardless
-of cores — so rows crossing it must be minimized; this is also just good
-100 TB design: predicates that Catalyst can evaluate stay in codegen):
+:func:`classify_subcells` is the coverer of ``PipIndex``'s lattice: it
+classifies the subcell grid under a region's bbox, so the engine keeps
+point-in-polygon evaluation out of Python for the vast majority of rows
+(the Arrow JVM↔Python boundary is a hard throughput ceiling — measured
+~4M rows/s in this sandbox regardless of cores — so rows crossing it must
+be minimized; this is also just good 100 TB design: predicates that
+Catalyst can evaluate stay in codegen).
 
-* :func:`detect_axis_rects` — a multipolygon that is exactly one
-  axis-aligned rectangular ring compiles to a pure Catalyst predicate
-  (strict inequalities = the reference's ``intersects ∧ ¬touches`` for a
-  point vs a rectangle).
-
-* :func:`classify_subcells` — for generic polygons, classify a fine
-  sub-grid of each candidate region: subcells whose closed extent is
-  strictly inside the polygon ("full") match without any geometric test;
-  only subcells touched by a polygon edge ("boundary") need the exact
-  numpy refine kernel.  Soundness: a subcell not crossed by any edge and
-  with all 4 corners strictly interior lies entirely in the interior
-  (the boundary can only enter a cell through an edge).  Edge-touched
-  cells are found with an exact parametric supercover (all cells a
-  segment passes through), so there are no false "full" cells even when
-  edges coincide with subcell gridlines.
+Subcells whose closed extent is strictly inside the polygon ("full")
+match without any geometric test; only subcells touched by a polygon
+edge ("boundary") need the exact numpy refine kernel — or, for an
+axis-rect region (the ``rect_parts`` rule in ``geom.s2cover``, covered at
+tile size), a strict bbox compare.  Soundness: a subcell not crossed by
+any edge and with all 4 corners strictly interior lies entirely in the
+interior (the boundary can only enter a cell through an edge).
+Edge-touched cells are found with an exact parametric supercover (all
+cells a segment passes through), so there are no false "full" cells even
+when edges coincide with subcell gridlines.
 
 This mirrors the interval/partial-cover indexing idea from the spatial
 join literature (PAPERS.md raster-intervals-style filter–refine) applied
@@ -29,7 +26,7 @@ to ODC's GridSpec arithmetic.
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Tuple
+from typing import Tuple
 
 import numpy as np
 
@@ -39,32 +36,6 @@ from .polygon import (
     multipolygon_bbox,
     points_strictly_inside_multi,
 )
-
-
-def detect_axis_rect(mp: MultiPolygon) -> Optional[Tuple[float, float, float, float]]:
-    """If the multipolygon is a single hole-free axis-aligned rectangle,
-    return (left, bottom, right, top), else None."""
-    if len(mp) != 1 or len(mp[0]) != 1:
-        return None
-    ring = as_ring(mp[0][0])
-    if len(ring) != 4:
-        return None
-    xs = np.unique(ring[:, 0])
-    ys = np.unique(ring[:, 1])
-    if len(xs) != 2 or len(ys) != 2:
-        return None
-    # each vertex must be a corner (xs x ys combos all present)
-    corners = {(x, y) for x, y in ring}
-    expect = {(x, y) for x in xs for y in ys}
-    if corners != expect:
-        return None
-    # edges must be axis-parallel (consecutive vertices share an axis)
-    for i in range(4):
-        x1, y1 = ring[i]
-        x2, y2 = ring[(i + 1) % 4]
-        if x1 != x2 and y1 != y2:
-            return None
-    return float(xs[0]), float(ys[0]), float(xs[1]), float(ys[1])
 
 
 def _supercover_cells(x1, y1, x2, y2, ox, oy, hx, hy=None) -> np.ndarray:

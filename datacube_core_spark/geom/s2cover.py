@@ -225,8 +225,9 @@ def rect_parts(mp: MultiPolygon) -> list:
     rect-vs-polygon clip runs only for genuinely non-rect parts.  This is
     what makes a few-hundred-region covering build a sub-second driver
     step instead of seconds of ring clipping.  ONE definition shared by
-    both coverers and the s2pip tier classifier — the rect rule must not
-    diverge between them (a part classified rect here passes the join by
+    both coverers and the rect rule of all three PIP indexes
+    (``operators.pip._rect_info``) — the rect rule must not diverge
+    between them (a part classified rect here passes the join by
     bbox predicate alone downstream).
     """
     parts = []

@@ -1,4 +1,4 @@
-"""Checkpointed, resumable per-cell batch runs (+ lineage & metrics).
+"""Checkpointed, resumable per-cell batch runs (+ lineage & metrics views).
 
 North-rule requirement: a killed run resumes without recomputing
 completed cells.  Semantics come from the reference:
@@ -8,14 +8,18 @@ completed cells.  Semantics come from the reference:
   but absent from the completed set.
 * persistence of task state between processes (reference
   ``datacube/ui/task_app.py:36-74`` pickles tasks to disk) — here it is
-  three append-only tables, designed as Iceberg tables (each append =
-  one Iceberg commit); this sandbox has no Iceberg runtime so they are
-  parquet directories with the same schema and commit discipline:
+  ONE append-only state table, designed as an Iceberg table (one append
+  = one Iceberg commit per batch); this sandbox has no Iceberg runtime
+  so it is a parquet directory with the same schema and commit
+  discipline:
 
   - ``checkpoints``: cell_x, cell_y, job_id, batch_id, status, attempt,
-    rows, secs, ts
-  - ``lineage``:     cell_x, cell_y, job_id, n_inputs, input_min, input_max
-  - ``metrics``:     job_id, stage, cell_x, cell_y, rows, secs, ts
+    rows, secs, n_inputs, ts
+
+  ``lineage()`` (cell_x, cell_y, job_id, n_inputs, input_min, input_max)
+  and ``metrics()`` (job_id, stage, cell_x, cell_y, rows, secs, ts) are
+  views over it: each of their fields is a projection of the checkpoint
+  row.
 
 Commit discipline (the Iceberg-snapshot validity rule, made explicit):
 every batch writes its output under a *batch-scoped partition*
@@ -47,12 +51,12 @@ from pyspark.sql import functions as F
 
 from ..frames import local_frame
 
-CHECKPOINT_SCHEMA = (
+# the driver-built part of a checkpoint row; ``ts`` is stamped at write
+_CHECKPOINT_FIELDS = (
     "cell_x INT, cell_y INT, job_id STRING, batch_id STRING, status STRING, "
-    "attempt INT, rows LONG, secs DOUBLE, ts TIMESTAMP"
+    "attempt INT, rows LONG, secs DOUBLE, n_inputs LONG"
 )
-LINEAGE_SCHEMA = "cell_x INT, cell_y INT, job_id STRING, n_inputs LONG, input_min LONG, input_max LONG"
-METRICS_SCHEMA = "job_id STRING, stage STRING, cell_x INT, cell_y INT, rows LONG, secs DOUBLE, ts TIMESTAMP"
+CHECKPOINT_SCHEMA = f"{_CHECKPOINT_FIELDS}, ts TIMESTAMP"
 
 
 def _has_parquet(path: str) -> bool:
@@ -72,8 +76,6 @@ class CheckpointedJob:
         self.base = base_path.rstrip("/")
         self.job_id = job_id or uuid.uuid4().hex[:12]
         self.ckpt_path = f"{self.base}/checkpoints"
-        self.lineage_path = f"{self.base}/lineage"
-        self.metrics_path = f"{self.base}/metrics"
         self.output_path = f"{self.base}/output"
 
     # -- table readers (empty-safe) ---------------------------------------
@@ -87,10 +89,17 @@ class CheckpointedJob:
         return self._read(self.ckpt_path, CHECKPOINT_SCHEMA)
 
     def lineage(self) -> DataFrame:
-        return self._read(self.lineage_path, LINEAGE_SCHEMA)
+        """cell_x, cell_y, job_id, n_inputs, input_min, input_max."""
+        n = F.col("n_inputs")
+        return self.checkpoints().select(
+            "cell_x", "cell_y", "job_id", n, F.lit(0).cast("long").alias("input_min"), n.alias("input_max")
+        )
 
     def metrics(self) -> DataFrame:
-        return self._read(self.metrics_path, METRICS_SCHEMA)
+        """job_id, stage, cell_x, cell_y, rows, secs, ts."""
+        return self.checkpoints().select(
+            "job_id", F.lit("process_batch").alias("stage"), "cell_x", "cell_y", "rows", "secs", "ts"
+        )
 
     def completed_cells(self) -> DataFrame:
         return self.checkpoints().where(F.col("status") == "done").select("cell_x", "cell_y").distinct()
@@ -208,37 +217,18 @@ class CheckpointedJob:
             if fail_before_checkpoint is not None and seq == fail_before_checkpoint:
                 raise RuntimeError(f"simulated kill inside commit window (batch {batch_id})")
 
-            now = F.current_timestamp()
+            # the batch's one state append: its rows carry the lineage and
+            # metrics fields too
             ckpt_rows = [
-                (cx, cy, self.job_id, batch_id, "done", 1, n_rows, float(secs)) for cx, cy in batch
+                (cx, cy, self.job_id, batch_id, "done", 1, n_rows, float(secs), int(n_inputs))
+                for cx, cy in batch
             ]
             (
-                local_frame(
-                    self.spark,
-                    ckpt_rows,
-                    "cell_x INT, cell_y INT, job_id STRING, batch_id STRING, status STRING, "
-                    "attempt INT, rows LONG, secs DOUBLE",
-                )
-                .withColumn("ts", now)
+                local_frame(self.spark, ckpt_rows, _CHECKPOINT_FIELDS)
+                .withColumn("ts", F.current_timestamp())
+                .coalesce(1)  # a few rows: one file, not one per core
                 .write.mode("append")
                 .parquet(self.ckpt_path)
-            )
-            lin_rows = [(cx, cy, self.job_id, n_inputs, 0, n_inputs) for cx, cy in batch]
-            (
-                local_frame(self.spark, lin_rows, LINEAGE_SCHEMA)
-                .write.mode("append")
-                .parquet(self.lineage_path)
-            )
-            met_rows = [(self.job_id, "process_batch", cx, cy, n_rows, float(secs)) for cx, cy in batch]
-            (
-                local_frame(
-                    self.spark,
-                    met_rows,
-                    "job_id STRING, stage STRING, cell_x INT, cell_y INT, rows LONG, secs DOUBLE",
-                )
-                .withColumn("ts", now)
-                .write.mode("append")
-                .parquet(self.metrics_path)
             )
             ran += 1
         return ran

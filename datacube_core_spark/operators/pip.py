@@ -5,32 +5,35 @@ cell-observation join): candidate matching on grid-cell index, then exact
 refine with ``intersects ∧ ¬touches`` semantics (reference
 ``datacube/api/grid_workflow.py:168-237``, ``datacube/api/core.py:933-939``,
 ``datacube/utils/geometry/_base.py:1302-1305``) — re-expressed Spark-first
-with a three-tier refine that keeps almost every row inside JVM codegen:
+as a cell covering whose rows are either Catalyst-decidable or in the
+generic band:
 
-1. **axis-rect regions** → the refine predicate is strict inequalities on
-   (lon, lat); attached to the broadcast candidate row and evaluated by
-   Catalyst.  Zero Python.
-2. **generic polygons, "full" subcells** → driver-side classification
-   (``geom.classify``) finds subcells strictly interior to the polygon;
-   pages in them match by a broadcast equi-join alone.  Zero Python.
-3. **generic polygons, boundary subcells** → only this thin band (edge
-   supercover cells) goes through the vectorized numpy PIP kernel in
+1. **Catalyst-decidable cells** → interior cells (their closed extent
+   lies strictly inside the region) pass by the broadcast equi-join
+   alone; every cell of an axis-rect region passes by strict
+   inequalities on (lon, lat) against the region's bbox, attached to
+   the candidate row.  Zero Python.  In ``PipIndex`` the rect regions
+   are level-0 cells: their tiles.
+2. **generic band** → only the partial cells of non-rect polygons (edge
+   supercover cells) go through the vectorized numpy PIP kernel in
    ``mapInPandas``.
 
-This module also owns the covering-join core shared with the S2 and
-geohash indexes (``s2pip.py``, ``ghpip.py``): one build path (driver loop
-or one-off executor job, decided by a limit-probe), one generic-blob
-collect + broadcast, one refine kernel, and the covering base class.  The
-model is Raster Intervals (SIGMOD 2023): a region is a cell covering split
-into full cells, decided by the equi-join alone, and partial cells, the
-only rows that reach the exact refine.  The indexes differ only in their
-keyer and coverer.
+This module owns the covering-join core shared by the three indexes —
+``PipIndex`` (the GridSpec subcell lattice, here), ``S2PipIndex``
+(``s2pip.py``) and ``GeohashPipIndex`` (``ghpip.py``): one build path
+(driver loop or one-off executor job, decided by a limit-probe), one
+generic-blob collect + broadcast, one exploded join, one refine kernel,
+one rect rule (``_rect_info`` over ``rect_parts``).  The model is Raster
+Intervals (SIGMOD 2023): a region is a cell covering split into full
+cells, decided by the equi-join alone, and partial cells, the only rows
+that reach the exact refine.  The indexes differ only in their keyer,
+ancestor expression and coverer.
 
 Rationale: the JVM↔Python Arrow boundary is a measured throughput ceiling
 (~4M rows/s in this sandbox regardless of cores); at 100 TB the same
 principle holds — rows crossing into Python must be a small fraction.
-The candidate/classification tables are |regions| × tiles-per-region —
-broadcastable; the big side never shuffles before its aggregation.
+The covering tables are |regions| × cells-per-region — broadcastable; the
+big side never shuffles before its aggregation.
 """
 
 from __future__ import annotations
@@ -45,11 +48,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..frames import local_frame
-from ..geom.classify import classify_subcells, detect_axis_rect
+from ..geom.classify import classify_subcells
 from ..geom.grid import GridSpec
 from ..geom.polygon import multipolygon_bbox, points_strictly_inside_multi, unpack_multipolygon
 from ..geom.s2cover import rect_parts
-from .tiling import point_tile_cols
 
 # above this many regions an index build moves off the driver into a
 # one-off distributed mapInPandas job; the resulting candidate tables are
@@ -58,8 +60,7 @@ _DISTRIBUTED_BUILD_THRESHOLD = 10_000
 
 # internal join columns carry a __pip_ prefix so a pages table that
 # already has a `level`/`cell`/`tile_x`/`r_left` column can't collide
-_LV, _CELL, _SX, _SY = "__pip_lv", "__pip_cell", "__pip_scx", "__pip_scy"
-_TX, _TY, _IN, _LEAF = "__pip_tx", "__pip_ty", "__pip_interior", "__pip_leaf"
+_LV, _CELL, _IN, _LEAF = "__pip_lv", "__pip_cell", "__pip_interior", "__pip_leaf"
 _BBOX = ("__pip_l", "__pip_b", "__pip_r", "__pip_t")
 
 
@@ -185,42 +186,6 @@ def _strictly_in_bbox(lon: str, lat: str) -> Column:
     return (F.col(lon) > l) & (F.col(lon) < r) & (F.col(lat) > b) & (F.col(lat) < t)
 
 
-def _cell_join(
-    pages_df: DataFrame,
-    cols: List[str],
-    elems: List[Column],
-    on: List[str],
-    full: Optional[DataFrame],
-    full_keep: Optional[Column],
-    band: Optional[DataFrame],
-    lon: str,
-    lat: str,
-    bc_geoms,
-) -> List[DataFrame]:
-    """The cell tiers of every index in one exploded pass: each page row
-    emits its cell key at EVERY active level (``elems``: structs of the
-    ``on`` columns; pipelined array+explode, no shuffle), then ONE
-    broadcast equi-join per tier against the level-tagged candidate
-    table — so the big side is read once per tier, not once per level.
-    ``full`` rows pass by the join alone (or by ``full_keep``); ``band``
-    rows go through the exact refine."""
-    sub = (
-        pages_df.withColumn("__pip_s", F.explode(F.array(*elems)))
-        .select(*cols, *(f"__pip_s.{c}" for c in on))
-    )
-    out_cols = [*cols, "region_id"]
-    parts: List[DataFrame] = []
-    if full is not None:
-        joined = sub.join(F.broadcast(full), on=on, how="inner")
-        if full_keep is not None:
-            joined = joined.where(full_keep)
-        parts.append(joined.select(*out_cols))
-    if band is not None:
-        cand = sub.join(F.broadcast(band), on=on, how="inner").select(*out_cols)
-        parts.append(_refine(cand, lon, lat, bc_geoms))
-    return parts
-
-
 def _rect_info(mp) -> tuple:
     """(is_axis_rect, bbox): whole-region form of the shared
     :func:`..geom.s2cover.rect_parts` rule — a single-part region whose
@@ -248,10 +213,11 @@ def _covering_rows(cover, rid: int, blob: bytes) -> List[tuple]:
 
 
 class _CoveringIndex:
-    """Shared body of the covering-keyed indexes (``S2PipIndex``,
-    ``GeohashPipIndex``).  A subclass supplies only its coverer (passed to
-    :meth:`_build`), ``_KEY_TYPE`` (the cell key's DDL type), a leaf keyer
-    :meth:`_with_leaf` and an ancestor expression :meth:`_ancestor`.
+    """Shared body of the covering-keyed indexes (``PipIndex``,
+    ``S2PipIndex``, ``GeohashPipIndex``).  A subclass supplies only its
+    coverer (passed to :meth:`_build`), ``_KEY_TYPE`` (the cell key's DDL
+    type), a leaf keyer :meth:`_with_leaf` and an ancestor expression
+    :meth:`_ancestor`.
 
     Plan shape:
 
@@ -278,6 +244,7 @@ class _CoveringIndex:
             spark, regions_df, functools.partial(_covering_rows, cover), schema,
             ("lv", "generic"), distributed,
         )
+        self._table = table
         self.levels = sorted({lv for lv, _ in tiers})
         if not self.levels:
             raise ValueError(f"{type(self).__name__} built from an empty region table")
@@ -313,18 +280,26 @@ class _CoveringIndex:
             # so the leaf-keying pass (and the caller's derivation) does
             # not run per tier (guide §2.4/§5)
             keyed = keyed.localCheckpoint(eager=False)
+        # every active level's cell key in one pass (pipelined array +
+        # explode, no shuffle), then ONE broadcast equi-join per tier —
+        # the big side is read once per tier, not once per level
         leaf = F.col(_LEAF)
-        elems = [
+        s = F.explode(F.array(*[
             F.struct(F.lit(lv).alias(_LV), self._ancestor(leaf, lv).alias(_CELL))
             for lv in self.levels
-        ]
-        parts = _cell_join(
-            keyed, cols, elems, [_LV, _CELL],
-            self._catalyst if self._has_catalyst else None,
-            F.col(_IN) | _strictly_in_bbox(lon, lat),
-            self._boundary_gen if self._has_generic else None,
-            lon, lat, self._bc_geoms,
-        )
+        ]))
+        sub = keyed.withColumn("__pip_s", s).select(*cols, f"__pip_s.{_LV}", f"__pip_s.{_CELL}")
+        on, out_cols = [_LV, _CELL], [*cols, "region_id"]
+        parts: List[DataFrame] = []
+        if self._has_catalyst:
+            parts.append(
+                sub.join(F.broadcast(self._catalyst), on=on, how="inner")
+                .where(F.col(_IN) | _strictly_in_bbox(lon, lat))
+                .select(*out_cols)
+            )
+        if self._has_generic:
+            cand = sub.join(F.broadcast(self._boundary_gen), on=on, how="inner").select(*out_cols)
+            parts.append(_refine(cand, lon, lat, self._bc_geoms))
         return functools.reduce(DataFrame.unionByName, parts)
 
 
@@ -340,60 +315,51 @@ def _pick_level_for(mp, base_x: float, base_y: float, target_cells: int, min_lev
     return max(min_level, min(max_level, level))
 
 
-_CLASSIFY_SCHEMA = (
-    "kind INT, level INT, ax LONG, ay LONG, region_id INT, "
-    "l DOUBLE, b DOUBLE, r DOUBLE, t DOUBLE, generic BOOLEAN"
-)
+_LOW32 = 0xFFFFFFFF
 
 
-def _classify_region(
-    grid: GridSpec,
-    base_x: float,
-    base_y: float,
-    ox: float,
-    oy: float,
-    target_cells: int,
-    min_level: int,
-    max_level: int,
-    geobox_cache: Dict,
-    rid: int,
-    blob: bytes,
-) -> List[tuple]:
-    """Classification rows for one region, in ``_CLASSIFY_SCHEMA``:
-    kind 0=rect candidate (ax/ay = tile), 1=full subcell, 2=boundary
-    subcell (the generic band).  Subcells are tile_size / 2^level PER
-    AXIS, so tile = subcell >> level exactly (no float division anywhere
-    in the subcell→tile mapping)."""
-    mp = unpack_multipolygon(blob)
-    rect = detect_axis_rect(mp)
-    if rect is not None:
-        l, b, r, t = rect
-        return [
-            (0, 0, int(tx), int(ty), rid, l, b, r, t, False)
-            for (tx, ty), _ in grid.tiles_from_geopolygon(mp, geobox_cache=geobox_cache)
-        ]
-    level = _pick_level_for(mp, base_x, base_y, target_cells, min_level, max_level)
+def _pack(x, y):
+    """Packed lattice key of subcell (x, y): x in the high 32 bits, y in
+    the low 32 as two's complement — exact for negative indices (|x|,
+    |y| < 2^31), no float in the key.  Works on ints and on LONG
+    columns alike."""
+    if isinstance(x, Column):
+        return F.shiftleft(x, 32).bitwiseOR(y.bitwiseAND(F.lit(_LOW32)))
+    return (int(x) << 32) | (int(y) & _LOW32)
+
+
+def _lattice_cover(base_x: float, base_y: float, ox: float, oy: float,
+                   target: int, min_level: int, max_level: int, mp):
+    """PipIndex coverer: an axis-rect region is covered at level 0 (the
+    tile grid itself), any other region at its adaptive level >=
+    ``min_level`` — so level 0 holds the rect regions alone.  Both are
+    ``classify_subcells`` on the tile_size / 2^level lattice: full cells
+    are the interior, the rest the partial band."""
+    level = 0 if _rect_info(mp)[0] else _pick_level_for(mp, base_x, base_y, target, min_level, max_level)
     full, bnd = classify_subcells(mp, ox, oy, base_x / (1 << level), base_y / (1 << level))
-    return [
-        (kind, level, int(cx), int(cy), rid, 0.0, 0.0, 0.0, 0.0, kind == 2)
-        for kind, cells in ((1, full), (2, bnd))
-        for cx, cy in cells
-    ]
+    keys = [_pack(x, y) for cells in (full, bnd) for x, y in cells]
+    return [level] * len(keys), keys, [True] * len(full) + [False] * len(bnd)
 
 
-class PipIndex:
-    """Build-once spatial index of a (small) region table over a GridSpec.
+class PipIndex(_CoveringIndex):
+    """Build-once spatial index of a (small) region table over a GridSpec
+    — the covering index on the grid's own subcell lattice.
 
-    Generic-polygon classification uses an ADAPTIVE subcell lattice: each
-    region is classified at h = tile_size / 2^L with L chosen so its bbox
-    spans ~``target_cells_per_axis`` subcells — small regions get fine
-    lattices (thin boundary bands, few refine rows), large regions coarse
-    ones (bounded broadcast size).  Every active level shares one
-    (level, sc_x, sc_y) join per tier.
+    The lattice is tile_size / 2^L PER AXIS (rectangular tile grids
+    fully supported), so a subcell never straddles a tile and tile =
+    subcell >> L exactly.  Axis-rect regions are covered at level 0 (their
+    tiles); generic polygons at an ADAPTIVE level L in [MIN_LEVEL,
+    MAX_LEVEL] chosen so the bbox spans ~``target_cells_per_axis``
+    subcells — small regions get fine lattices (thin boundary bands, few
+    refine rows), large ones coarse lattices (bounded broadcast size).
+    The cell key is the packed (sc_x, sc_y) long; a point is keyed once at
+    MAX_LEVEL and its ancestor at every active level is two arithmetic
+    shifts (floor division by 2^k, exact for negative indices).
     """
 
     MIN_LEVEL = 2
     MAX_LEVEL = 8
+    _KEY_TYPE = "LONG"
 
     def __init__(
         self,
@@ -405,53 +371,55 @@ class PipIndex:
     ):
         self.grid = grid
         size_y, size_x = grid.tile_size
-        # per-axis subcell lattice: tile_size / 2^level on EACH axis, so a
-        # subcell never straddles a tile boundary and tile = subcell >> L
-        # exactly (rectangular tile grids fully supported)
         self._base_x = abs(size_x)
         self._base_y = abs(size_y)
         self.ox = grid.origin[1]
         self.oy = grid.origin[0]
         self.target_cells = target_cells_per_axis
-
-        rows_of = functools.partial(
-            _classify_region, grid, self._base_x, self._base_y, self.ox, self.oy,
-            self.target_cells, self.MIN_LEVEL, self.MAX_LEVEL, {},
+        cover = functools.partial(
+            _lattice_cover, self._base_x, self._base_y, self.ox, self.oy,
+            self.target_cells, self.MIN_LEVEL, self.MAX_LEVEL,
         )
-        table, tiers, self.geom_map, self._bc_geoms = _build_table(
-            spark, regions_df, rows_of, _CLASSIFY_SCHEMA, ("kind", "level"), distributed_classify
+        self._build(spark, regions_df, cover, distributed_classify)
+
+    def _with_leaf(self, df: DataFrame, lon: str, lat: str) -> DataFrame:
+        # the build's floor rule at MAX_LEVEL; h = base / 2^L is exact
+        n = 1 << self.MAX_LEVEL
+        sx = F.floor((F.col(lon) - F.lit(self.ox)) / F.lit(self._base_x / n))
+        sy = F.floor((F.col(lat) - F.lit(self.oy)) / F.lit(self._base_y / n))
+        return df.withColumn(_LEAF, _pack(sx, sy))
+
+    def _ancestor(self, leaf: Column, level: int) -> Column:
+        k = self.MAX_LEVEL - level
+        if k == 0:
+            return leaf
+        return _pack(F.shiftright(leaf, 32 + k), F.shiftright(F.shiftleft(leaf, 32), 32 + k))
+
+    def _tiles(self) -> Tuple[Column, Column]:
+        """(tile_x, tile_y) of each covering row: tile = cell >> level."""
+        return tuple(
+            F.expr(f"shiftright({x}, 32 + lv)").cast("int").alias(a)
+            for x, a in (("cell", "tile_x"), ("shiftleft(cell, 32)", "tile_y"))
         )
-        kind, level = F.col("kind"), F.col("level")
-        self.rect_candidates: Optional[DataFrame] = None
-        if any(k == 0 for k, _ in tiers):
-            self.rect_candidates = table.where(kind == 0).select(
-                F.col("ax").cast("int").alias("tile_x"),
-                F.col("ay").cast("int").alias("tile_y"),
-                "region_id",
-                F.col("l").alias("r_left"), F.col("b").alias("r_bottom"),
-                F.col("r").alias("r_right"), F.col("t").alias("r_top"),
-            )
-        # per-level (full, boundary) subcell tables — the lattice as
-        # consumers such as the raster operators read it
-        self.levels: Dict[int, Tuple[Optional[DataFrame], Optional[DataFrame]]] = {
-            lv: tuple(
-                table.where((kind == k) & (level == lv)).select(
-                    F.col("ax").alias("sc_x"), F.col("ay").alias("sc_y"), "region_id"
-                )
-                if (k, lv) in tiers else None
-                for k in (1, 2)
-            )
-            for lv in sorted({lv for k, lv in tiers if k})
-        }
 
-        def tier(k: int) -> Optional[DataFrame]:
-            if not any(t == k for t, _ in tiers):
-                return None
-            return table.where(kind == k).select(
-                level.alias(_LV), F.col("ax").alias(_SX), F.col("ay").alias(_SY), "region_id"
-            )
+    # the views are built once per index: analysing one costs tens of ms
+    # of driver time, and the raster operators read them per query
+    @functools.cached_property
+    def rect_candidates(self) -> Optional[DataFrame]:
+        """(tile_x, tile_y, region_id, r_left, r_bottom, r_right, r_top) of
+        the axis-rect regions — their level-0 cells; None without any."""
+        if 0 not in self.levels:
+            return None
+        return self._table.where(F.col("lv") == 0).select(
+            *self._tiles(), "region_id", "r_left", "r_bottom", "r_right", "r_top"
+        )
 
-        self._full, self._boundary = tier(1), tier(2)
+    @functools.cached_property
+    def region_tiles(self) -> DataFrame:
+        """Distinct (tile_x, tile_y, region_id) of the GENERIC regions'
+        covering cells (level > 0; level 0 holds only axis rects) — the
+        candidate (tile, region) pairs of the raster kernel."""
+        return self._table.where(F.col("lv") > 0).select(*self._tiles(), "region_id").distinct()
 
     def join(
         self,
@@ -464,46 +432,10 @@ class PipIndex:
 
         Returns (keep_cols or all pages columns) + lon/lat + ``region_id``.
 
-        The lattice tiers compute ALL per-level subcell ids in one pass
-        over the big side and join ONCE per tier against the level-tagged
-        candidate table, so the big table is read 3× total (rect tier,
-        full join, boundary join) instead of 1 + 2·|levels| times
-        (PERF.md §13) — at 100 TB each avoided pass is a full table read."""
-        base_cols = keep_cols if keep_cols is not None else [c for c in pages_df.columns if c not in (lon, lat)]
-        cols = [*base_cols, lon, lat]
-        parts: List[DataFrame] = []
-
-        # tier 1: axis-rect regions — Catalyst-only
-        if self.rect_candidates is not None:
-            tx, ty = point_tile_cols(self.grid, F.col(lon), F.col(lat))
-            cand = self.rect_candidates.select(
-                F.col("tile_x").alias(_TX), F.col("tile_y").alias(_TY), "region_id", *_bbox_cols()
-            )
-            parts.append(
-                pages_df.select(*cols, tx.alias(_TX), ty.alias(_TY))
-                .join(F.broadcast(cand), on=[_TX, _TY], how="inner")
-                .where(_strictly_in_bbox(lon, lat))
-                .select(*cols, "region_id")
-            )
-
-        # tiers 2-3: interior subcells by the equi-join alone, boundary
-        # subcells through the exact refine
-        if self.levels:
-            elems = []
-            for lv in sorted(self.levels):
-                hx = self._base_x / (1 << lv)
-                hy = self._base_y / (1 << lv)
-                scx = F.floor((F.col(lon) - F.lit(self.ox)) / F.lit(hx)).cast("long")
-                scy = F.floor((F.col(lat) - F.lit(self.oy)) / F.lit(hy)).cast("long")
-                elems.append(F.struct(F.lit(lv).alias(_LV), scx.alias(_SX), scy.alias(_SY)))
-            parts.extend(_cell_join(
-                pages_df.select(*cols), cols, elems, [_LV, _SX, _SY],
-                self._full, None, self._boundary, lon, lat, self._bc_geoms,
-            ))
-
-        if not parts:
-            raise ValueError("PipIndex built from an empty region table")
-        return functools.reduce(DataFrame.unionByName, parts)
+        One pass keys every page at every active level; the big side is
+        then read once per tier — once when every region is an axis rect,
+        twice when generic polygons add the refine band (PERF.md §13)."""
+        return self._join(pages_df, lon, lat, keep_cols, None)
 
 
 def pip_join(

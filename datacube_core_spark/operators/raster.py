@@ -12,8 +12,9 @@ polygons; sample = point → pixel index via the inverse affine
   entirely inside codegen.  Pixel row 0 is the TOP row (negative y
   resolution), matching the reference's geobox orientation.
 * rasterize (generic polygons) — vectorized numpy PIP kernel over the
-  pixel-center meshgrid inside ``applyInPandas`` (per-(tile, region)
-  groups — the reference's per-tile kernel shape).
+  pixel-center meshgrid inside ``mapInPandas``, one raster per
+  (tile, region) pair of the index's ``region_tiles`` view (the
+  reference's per-tile kernel shape).
 * sample — pure Catalyst: tile + pixel index arithmetic, broadcast join
   against the raster tiles, ``element_at`` lookup.
 
@@ -24,6 +25,7 @@ strict-interior rule, consistent with the PIP join.
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator, Optional
 
 import numpy as np
@@ -31,7 +33,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..geom.classify import detect_axis_rect
 from ..geom.grid import GridSpec
 from ..geom.polygon import points_strictly_inside_multi, unpack_multipolygon
 from .pip import PipIndex
@@ -91,41 +92,25 @@ def rasterize_generic_regions(
     regions_df: DataFrame,
     grid: GridSpec,
     res: float,
+    index: Optional[PipIndex] = None,
 ) -> DataFrame:
-    """Per-(tile, region) mask rasters for arbitrary polygons — numpy PIP
-    over the pixel-center meshgrid inside mapInPandas (per-tile kernel)."""
+    """Per-(tile, region) mask rasters for arbitrary polygons.  Axis-rect
+    regions take the Catalyst path of :func:`rasterize_rect_regions`;
+    generic polygons run numpy PIP over the pixel-center meshgrid inside
+    mapInPandas (per-tile kernel), reading their blobs from the index's
+    generic-blob broadcast — the region geometry is collected once, by
+    the index build."""
     spark = regions_df.sparkSession
-    index = PipIndex(spark, regions_df, grid)
+    if index is None:
+        index = PipIndex(spark, regions_df, grid)
     h, w = _tile_frame(grid, res)
     size_y, size_x = grid.tile_size
     oy, ox = grid.origin
-    # collect ALL blobs here (not index.geom_map): this kernel rasterizes
-    # rect regions too, and the index deliberately keeps only generic
-    # blobs driver-side
-    geom_map = {
-        int(r["region_id"]): bytes(r["geom"])
-        for r in regions_df.select("region_id", "geom").collect()
-    }
-    bc = spark.sparkContext.broadcast(geom_map)
-
-    # candidate (tile, region) pairs from the index (rect + subcell tiers)
     parts = []
     if index.rect_candidates is not None:
-        parts.append(index.rect_candidates.select("tile_x", "tile_y", "region_id"))
-    for level, (full_cells, boundary_cells) in index.levels.items():
-        for cells in (full_cells, boundary_cells):
-            if cells is not None:
-                # the lattice is tile_size / 2^level per axis, so the tile
-                # is an exact arithmetic shift (floor division by 2^level,
-                # correct for negative indices too) — no float arithmetic
-                tx = F.shiftright(F.col("sc_x"), level).cast("int")
-                ty = F.shiftright(F.col("sc_y"), level).cast("int")
-                parts.append(cells.select(tx.alias("tile_x"), ty.alias("tile_y"), "region_id").distinct())
-    cand = parts[0]
-    for p in parts[1:]:
-        cand = cand.unionByName(p)
-    cand = cand.distinct()
+        parts.append(rasterize_rect_regions(regions_df, grid, res, index=index))
 
+    bc = index._bc_geoms
     abs_sx, abs_sy = abs(size_x), abs(size_y)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -152,8 +137,10 @@ def rasterize_generic_regions(
                     out_rows, columns=["tile_x", "tile_y", "region_id", "h", "w", "raster"]
                 )
 
-    schema = "tile_x INT, tile_y INT, region_id INT, h INT, w INT, raster ARRAY<INT>"
-    return cand.mapInPandas(kernel, schema=schema)
+    if index.geom_map:
+        schema = "tile_x INT, tile_y INT, region_id INT, h INT, w INT, raster ARRAY<INT>"
+        parts.append(index.region_tiles.mapInPandas(kernel, schema=schema))
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def sample_rasters(

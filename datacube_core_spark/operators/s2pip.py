@@ -20,10 +20,10 @@ The build, the tiered join and the refine are the covering-join core in
   the mixed-level budgeted coverer.
 
 100-TB notes: the big side is scanned ONCE when every region is
-axis-rect, twice when generic regions exist (their refine band) —
-against PipIndex's three; this matters more here than there because
-each scan pays the Arrow leaf-keying kernel (unless the caller pre-keys
-via ``cell_col``).  All joins are AQE-friendly broadcast hash joins on
+axis-rect, twice when generic regions exist (their refine band) — the
+same for all three indexes; here the keyed side is materialized once
+for both tiers because keying pays the Arrow leaf kernel (unless the
+caller pre-keys via ``cell_col``).  All joins are AQE-friendly broadcast hash joins on
 one long key.
 """
 

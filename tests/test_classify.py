@@ -3,19 +3,24 @@
 import numpy as np
 import pytest
 
-from datacube_core_spark.geom.classify import classify_subcells, detect_axis_rect
+from datacube_core_spark.geom.classify import classify_subcells
 from datacube_core_spark.geom.polygon import box_ring, points_strictly_inside_multi
 from datacube_core_spark.sources.regions import regions_complex
 
 
 def test_detect_axis_rect():
-    assert detect_axis_rect([[box_ring(0, 1, 5, 7)]]) == (0.0, 1.0, 5.0, 7.0)
-    assert detect_axis_rect([[box_ring(0, 1, 5, 7), box_ring(1, 2, 3, 4)]]) is None  # hole
-    assert detect_axis_rect([[box_ring(0, 1, 5, 7)], [box_ring(8, 8, 9, 9)]]) is None  # multi
+    """Axis-rect detection (the one rect rule of all three PIP indexes,
+    which sends a region to level-0 lattice cells): the bbox of a rect;
+    a hole, a second part, a triangle and a rotated square are not rects."""
+    from datacube_core_spark.operators.pip import _rect_info
+
+    assert _rect_info([[box_ring(0, 1, 5, 7)]]) == (True, (0.0, 1.0, 5.0, 7.0))
+    assert _rect_info([[box_ring(0, 1, 5, 7), box_ring(1, 2, 3, 4)]])[0] is False  # hole
+    assert _rect_info([[box_ring(0, 1, 5, 7)], [box_ring(8, 8, 9, 9)]])[0] is False  # multi
     tri = np.array([(0, 0), (4, 0), (2, 3)], dtype=float)
-    assert detect_axis_rect([[tri]]) is None
+    assert _rect_info([[tri]])[0] is False
     rot = np.array([(0, 1), (1, 0), (2, 1), (1, 2)], dtype=float)
-    assert detect_axis_rect([[rot]]) is None
+    assert _rect_info([[rot]])[0] is False
 
 
 @pytest.mark.parametrize("name", sorted(regions_complex().keys()))

@@ -197,9 +197,9 @@ def test_pip_index_rectangular_tiles(spark, pages_pdf):
 
 
 def test_pip_index_distributed_classify_parity(spark):
-    """Forcing classification onto executors must produce identical index
-    structures (rect candidates, per-level full/boundary subcell sets) and
-    identical join output."""
+    """Forcing classification onto executors must produce an identical
+    covering table (every level, cell, interior flag, bbox and band flag)
+    and identical join output."""
     from datacube_core_spark.operators.pip import PipIndex
     from datacube_core_spark.sources.regions import regions, regions_complex
     from datacube_core_spark.geom.polygon import pack_multipolygon
@@ -219,19 +219,10 @@ def test_pip_index_distributed_classify_parity(spark):
     idx_x = PipIndex(spark, regs, GRID_PAGES, distributed_classify=True)
 
     def snap(idx):
-        rect = (
-            frozenset(map(tuple, idx.rect_candidates.collect()))
-            if idx.rect_candidates is not None else frozenset()
-        )
-        levels = {}
-        for lv, (f, b) in idx.levels.items():
-            levels[lv] = (
-                frozenset(map(tuple, f.collect())) if f is not None else frozenset(),
-                frozenset(map(tuple, b.collect())) if b is not None else frozenset(),
-            )
-        return rect, levels
+        return sorted(map(tuple, idx._table.collect()))
 
     assert snap(idx_d) == snap(idx_x)
+    assert idx_d.levels == idx_x.levels and 0 in idx_d.levels
 
     from datacube_core_spark.sources.pages import pages
     p = pages(spark, SF_TINY)
@@ -302,7 +293,8 @@ def test_pip_single_scan_matches_per_level_and_reads_less(spark, pages_pdf):
         rows, "region_id INT, name STRING, left DOUBLE, bottom DOUBLE, right DOUBLE, top DOUBLE, geom BINARY"
     )
     idx = PipIndex(spark, regs, GRID_PAGES)
-    assert len(idx.levels) >= 2, "fixture must span multiple lattice levels"
+    # level 0 holds the fixture's axis-rect boxes; count generic levels only
+    assert len([lv for lv in idx.levels if lv > 0]) >= 2, "fixture must span multiple lattice levels"
 
     p = pages(spark, SF_TINY).select("doc_id", "lon", "lat")
     a = idx.join(p, keep_cols=["doc_id"])
@@ -319,6 +311,44 @@ def test_pip_single_scan_matches_per_level_and_reads_less(spark, pages_pdf):
     # only the current section
     plan = a._jdf.queryExecution().executedPlan().toString()
     assert plan.split("== Initial Plan ==")[0].count("Scan parquet") <= 3
+
+
+def _big_side_reads(df) -> int:
+    """Reads of the big side in the executed plan: parquet scans plus
+    scans of a materialized (checkpointed) keyed big side.  AQE prints
+    the plan twice (current + "== Initial Plan =="): count only the
+    current section."""
+    plan = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    return plan.count("Scan parquet") + plan.count("Scan ExistingRDD")
+
+
+def test_pip_mixed_rect_generic_reads_big_side_twice(spark, pages_pdf):
+    """A mixed rect + generic region table (the parity test's fixture):
+    rect regions are level-0 cells of the one covering, so the rect and
+    interior tiers are ONE exploded broadcast join and the generic band
+    the other — the big side is read at most twice, not three times
+    (rect tier + full join + boundary join)."""
+    from datacube_core_spark.operators.pip import PipIndex
+
+    shapes = sorted(regions_complex().items())
+    extra = [
+        (1000 + i, name, 0.0, 0.0, 0.0, 0.0, bytearray(pack_multipolygon(mp)))
+        for i, (name, mp) in enumerate(shapes)
+    ]
+    regs = regions(spark).unionByName(spark.createDataFrame(
+        extra, "region_id INT, name STRING, left DOUBLE, bottom DOUBLE, right DOUBLE, top DOUBLE, geom BINARY"
+    ))
+    idx = PipIndex(spark, regs, GRID_PAGES, distributed_classify=False)
+    a = idx.join(pages(spark, SF_TINY).select("doc_id", "lon", "lat"), keep_cols=["doc_id"])
+    got = sorted((int(r["doc_id"]), int(r["region_id"])) for r in a.collect())
+
+    xs, ys, ids = pages_pdf.lon.to_numpy(), pages_pdf.lat.to_numpy(), pages_pdf.doc_id.to_numpy()
+    mps = [*region_multipolygons().items(), *((1000 + i, mp) for i, (_, mp) in enumerate(shapes))]
+    exp = sorted(
+        (int(d), rid) for rid, mp in mps for d in ids[points_strictly_inside_multi(xs, ys, mp)]
+    )
+    assert got == exp and got
+    assert 1 <= _big_side_reads(a) <= 2
 
 
 def test_ivf_topk_recall_and_plan(spark):

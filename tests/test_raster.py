@@ -50,6 +50,32 @@ def test_raster_orientation_row0_is_top(spark):
     assert arr[4:].sum() == 0
 
 
+def test_generic_rasterize_collects_geometry_once(spark, monkeypatch):
+    """A rect + generic region set pulls the region blobs to the driver
+    ONCE — in the index build; the kernel reads the index's generic-blob
+    broadcast and rect regions are rasterized from their bbox."""
+    shapes = {
+        "box": [[box_ring(1.0, 1.0, 7.0, 6.0)]],
+        "ell": [[np.array([(8, 8), (14, 8), (14, 10), (10, 10), (10, 14), (8, 14)], dtype=float)]],
+    }
+    rdf = _mk_regions(spark, shapes)
+    cls = type(rdf)
+    collect = cls.collect
+    geom_collects = []
+
+    def counting_collect(self):
+        if "geom" in self.columns:
+            geom_collects.append(self.columns)
+        return collect(self)
+
+    monkeypatch.setattr(cls, "collect", counting_collect)
+    out = rasterize_generic_regions(rdf, GRID, RES)
+    monkeypatch.setattr(cls, "collect", collect)
+    assert len(geom_collects) == 1, geom_collects
+    got = {(r["tile_x"], r["tile_y"], r["region_id"]) for r in out.collect()}
+    assert {rid for _, _, rid in got} == {0, 1}
+
+
 def test_generic_matches_bruteforce_pixel_pip(spark):
     shapes = {
         "donut": [[box_ring(1.0, 1.0, 7.0, 7.0), box_ring(3.0, 3.0, 5.0, 5.0)]],
@@ -67,6 +93,27 @@ def test_generic_matches_bruteforce_pixel_pip(spark):
         XX, YY = np.meshgrid(cols, rows)
         exp = points_strictly_inside_multi(XX.ravel(), YY.ravel(), mp).astype(int).tolist()
         assert list(r["raster"]) == exp, (r["tile_x"], r["tile_y"], r["region_id"])
+
+
+def test_rect_raster_matches_bruteforce_pixel_pip(spark):
+    """Rect regions of a rect + generic set are rasterized by the Catalyst
+    bbox compare; each of their rasters must equal the brute-force pixel
+    PIP, and the rasters together must hold every pixel inside the rect."""
+    shapes = {
+        "box": [[box_ring(1.0, 1.0, 7.0, 6.0)]],
+        "ell": [[np.array([(8, 8), (14, 8), (14, 10), (10, 10), (10, 14), (8, 14)], dtype=float)]],
+    }
+    rdf = _mk_regions(spark, shapes)
+    out = [r for r in rasterize_generic_regions(rdf, GRID, RES).collect() if r["region_id"] == 0]
+    mp = shapes["box"]
+    for r in out:
+        left = r["tile_x"] * 4.0 - 180.0
+        top = (r["tile_y"] + 1) * 4.0 - 90.0
+        XX, YY = np.meshgrid(left + (np.arange(8) + 0.5) * RES, top - (np.arange(8) + 0.5) * RES)
+        exp = points_strictly_inside_multi(XX.ravel(), YY.ravel(), mp).astype(int).tolist()
+        assert list(r["raster"]) == exp, (r["tile_x"], r["tile_y"])
+    # 12 x 10 pixel centers lie strictly inside the 6 x 5 box at RES 0.5
+    assert sum(sum(r["raster"]) for r in out) == 120
 
 
 def test_sample_lookup(spark):
