@@ -2587,9 +2587,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lcc_project": q_lcc_project,
         "domain_stats": q_domain_stats,
         "sessionize": q_sessionize,
+        # entries whose MODULE changed most recently (operators/knn.py,
+        # operators/lineage.py) sort inside the window too
+        "knn": q_knn,
+        "knn_bulk": q_knn_bulk,
+        "knn_dense": q_knn_dense,
+        "lineage": q_lineage,
+        "lineage_paths": q_lineage_paths,
+        # earlier module changes, displaced past the window by the
+        # entries above (their modules are unchanged since)
         "recrawl_dedup": q_recrawl_dedup,
-        # entries whose MODULE changed this round sort inside the window
-        # too, even though their own plans are unchanged
         "token_budget": q_token_budget,
         "stratified_sample": q_stratified_sample,
         "decontaminate": q_decontaminate,
@@ -2597,9 +2604,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bbox_tiles": q_bbox_tiles,
         "pip_pairs": q_pip_pairs,
         "pip_region_count": q_pip_region_count,
-        "knn": q_knn,
-        "knn_bulk": q_knn_bulk,
-        "knn_dense": q_knn_dense,
         "utm_project": q_utm_project,
         "s2_cells": q_s2_cells,
         "span_dedup": q_span_dedup,
@@ -2629,8 +2633,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dup_leniency": q_dup_leniency,
         "range_buckets": q_range_buckets,
         "salted_cell_agg": q_salted_cell_agg,
-        "lineage": q_lineage,
-        "lineage_paths": q_lineage_paths,
         "page_density": q_page_density,
         "cell_rollup": q_cell_rollup,
         "cell_obs": q_cell_obs,

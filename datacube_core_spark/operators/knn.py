@@ -11,7 +11,17 @@ Correctness guarantee: a page outside ring ``r`` of the query's tile is at
 coordinate distance ≥ r·tile_size, so once the k-th candidate's distance is
 ≤ r·tile_size the answer is exact.  Queries that fail the guarantee are
 re-run with doubled radius (driver-side loop over the shrinking remainder —
-each pass is one distributed job, never a per-row loop).
+each pass is one distributed job, never a per-row loop), starting at r = 1.
+
+Dense cells (PERF.md §15): a tile whose query count × 3×3-halo page count
+exceeds ``local_index_pairs`` is answered before the ring loop by ONE
+local pass, a per-cell numpy index in one applyInPandas group per
+query-occupied cell.  The cell is the tile split s×s, with one factor s
+per call derived from the largest dense halo (s = 1 when every halo fits
+``local_max_halo_pages``); queries are salted into hash buckets to bound
+group size and, at s = 1, to spread a few hot tiles over the cluster.
+Queries the r=1 guarantee of their cell does not resolve rejoin the ring
+escalation.
 
 Determinism: ties broken by (dist_sq, doc_id) — row-for-row reproducible
 and oracle-checkable (squared distance avoids sqrt and is bit-identical
@@ -40,7 +50,8 @@ def _ring_offsets(spark, r: int) -> DataFrame:
 # Dense-cell local-index pass (PERF.md §15): a tile whose query count ×
 # ring-page count explodes (hot URL clusters put ~n×n co-located pairs in
 # one cell, grid-size-invariant) is answered by a PER-CELL numpy fine-grid
-# index inside one applyInPandas group instead of the n_q×n_p equi-join.
+# index inside one applyInPandas group instead of the n_q×n_p equi-join;
+# an oversized page halo splits the tile into s×s sub-cells (PERF.md §21).
 # ---------------------------------------------------------------------------
 
 
@@ -67,11 +78,12 @@ def _make_local_knn_kernel(k: int, guard_sq: float):
     the halo page set (a numpy uniform fine grid with per-query block
     escalation — O(n log n) build, ~O(k) probe) and resolves it iff the
     distributed round-1 test would: ≥k candidates and k-th dist_sq
-    strictly < ``guard_sq`` = (r0·tile_size)².  Resolved rows are
-    row-identical to the equi-join plan's output (same IEEE-754 op order
-    ``(px-qx)²+(py-qy)²``, same strict guarantee, same (dist_sq, id)
-    tie-break); unresolved queries come back as ``resolved=false`` marker
-    rows and re-enter the distributed ring escalation.
+    strictly < ``guard_sq`` = (cell side)², the r=1 ring guarantee of the
+    group's (sub-)cell.  Resolved rows are row-identical to the equi-join
+    plan's output (same IEEE-754 op order ``(px-qx)²+(py-qy)²``, same
+    strict guarantee, same (dist_sq, id) tie-break); unresolved queries
+    come back as ``resolved=false`` marker rows and re-enter the
+    distributed ring escalation.
     """
 
     def kernel(pdf):
@@ -270,73 +282,82 @@ def _make_local_knn_kernel(k: int, guard_sq: float):
     return kernel
 
 
-def _subcell_local_pass(
+def _local_pass(
     spark,
     pending: DataFrame,
     pages_t: DataFrame,
     grid: GridSpec,
-    big,
-    rnp,
+    dense: dict,
+    dense_df: DataFrame,
+    s: int,
     k: int,
     *,
     id_col: str,
-    id_type: str,
-    qid_type: str,
-    out_schema: str,
-    local_max_halo_pages: int,
     local_max_group_queries: int,
 ) -> DataFrame:
-    """SUB-CELL split for dense tiles whose page HALO alone exceeds the
-    per-group memory budget (PERF.md §16 100-TB note, closed in r6).
+    """Answer the queries of the ``dense`` tiles (a {tile: query count}
+    map) with the local kernel, one pandas group per query-occupied
+    SUB-CELL of an s×s split of each dense tile (s = 1: the sub-cell is
+    the tile itself).
 
-    Query-side salting caps queries per pandas group but replicates the
-    FULL halo into every bucket — when the halo itself is the memory
-    problem, only a finer spatial key helps.  Each oversized tile is cut
-    into an s×s sub-grid with s = ⌈√(halo/budget)⌉ (uniform across the
-    oversized tiles — the max; a finer-than-needed split costs only
-    escalations).  The pass is then exactly the dense-cell local-index
-    algorithm one level down: queries keyed by their GLOBAL sub-cell,
-    halo pages exploded to the 3×3 sub-ring, same kernel, guard =
-    (min sub step)² — the r=1 ring guarantee at sub-cell granularity, so
-    resolved rows keep the strict exactness contract and the (bounded)
-    remainder re-enters the distributed escalation loop.  Per-group
-    memory is now ~halo/s², independent of how dense the tile is.
+    Queries are keyed by their global sub-cell; pages join a broadcast
+    map from each page sub-cell to the occupied sub-cells whose 3×3
+    sub-ring holds it, so each group holds exactly the r=1 ring candidate
+    set one level down, and the guard is (min sub step)² — the r=1 ring
+    guarantee.  Resolved rows keep the strict exactness contract;
+    unresolved queries come back as marker rows for the distributed
+    escalation.  Per-group page memory is ~halo/s², and page volume
+    shuffled is halo × 9 × salt at most — linear in the halo, never
+    n_q × n_p.
 
-    Page volume shuffled: halo pages × 9 (sub-ring explode) × salt,
-    pruned by a semi-join against the sub-cells that actually hold
-    queries — linear in the halo, never n_q × n_p.
+    Query salt (hash buckets; the halo pages are replicated per bucket)
+    serves memory — at most ``local_max_group_queries`` queries per
+    group — and, at s = 1, parallelism — a few dense tiles must still fan
+    out over ~2×cores tasks, capped at ~1k queries per bucket to bound
+    the page duplication::
+
+        salt = max(1, ⌈max_q/local_max_group_queries⌉,
+                   min(⌈2·par/n_cells⌉, max(1, max_q // 1000)) if s = 1)
+
+    At s > 1 the split already yields s² groups per tile and the page
+    halo is the payload it bounds, so replicating it for parallelism
+    only adds work (PERF.md §31).  ``max_q`` (largest per-cell query
+    count) and ``n_cells`` (occupied cells) are the probe's per-tile
+    counts at s = 1; at s > 1 they come from one collected aggregate of
+    ≤ s²·|dense| rows — geometry-bounded, not data-sized.
     """
-    s_split = 2
-    for t in big:
-        need = math.isqrt(max(1, (int(rnp[t]) - 1) // int(local_max_halo_pages))) + 1
-        s_split = max(s_split, need)
-
     size_y_t, size_x_t = grid.tile_size
     oy, ox = grid.origin
-    step_x = float(size_x_t) / s_split
-    step_y = float(size_y_t) / s_split
+    step_x = float(size_x_t) / s
+    step_y = float(size_y_t) / s
     guard_sq = float(min(abs(step_x), abs(step_y))) ** 2
+    id_type = dict(pages_t.dtypes)[id_col]
+    qid_type = dict(pending.dtypes)["qid"]
 
-    big_df = local_frame(spark, sorted(big), "dtx INT, dty INT")
-    q_big = pending.join(
-        F.broadcast(big_df),
-        on=[pending["qtx"] == big_df["dtx"], pending["qty"] == big_df["dty"]],
-        how="inner",
-    )
     sgx = _axis_index(F.col("q_lon"), ox, step_x)
     sgy = _axis_index(F.col("q_lat"), oy, step_y)
-    q_sub = q_big.select("qid", "q_lon", "q_lat", sgx.alias("sgx"), sgy.alias("sgy"))
+    q_sub = pending.join(
+        F.broadcast(dense_df),
+        on=[pending["qtx"] == dense_df["dtx"], pending["qty"] == dense_df["dty"]],
+        how="inner",
+    ).select("qid", "q_lon", "q_lat", sgx.alias("sgx"), sgy.alias("sgy"))
 
-    # bounded aggs: max queries in one sub-cell (for the memory salt) and
-    # the occupied sub-cell list (for the page-side prune) are both ≤
-    # s²·|big| rows — geometry-bounded, not data-sized
-    mx = q_sub.groupBy("sgx", "sgy").agg(F.count("*").alias("n")).agg(F.max("n")).collect()[0][0]
-    salt = max(1, -(-int(mx) // int(local_max_group_queries)))
-    qcells = q_sub.select("sgx", "sgy").distinct()
+    if s == 1:
+        cells = dense
+    else:
+        cells = {
+            (c["sgx"], c["sgy"]): int(c["n"])
+            for c in q_sub.groupBy("sgx", "sgy").agg(F.count("*").alias("n")).collect()
+        }
+    max_q = max(cells.values())
+    salt = max(1, -(-max_q // int(local_max_group_queries)))
+    if s == 1:
+        par = spark.sparkContext.defaultParallelism
+        salt = max(salt, min(-(-2 * par // len(cells)), max(1, max_q // 1000)))
 
     q_part = q_sub.select(
-        F.col("sgx").alias("dtx"),
-        F.col("sgy").alias("dty"),
+        "sgx",
+        "sgy",
         F.pmod(F.xxhash64("qid"), F.lit(salt)).cast("int").alias("sb"),
         F.lit(1).cast("tinyint").alias("role"),
         F.col("qid"),
@@ -345,32 +366,25 @@ def _subcell_local_pass(
         F.col("q_lat").alias("y"),
     )
 
-    # tile-level halo prefilter (tiny broadcast), then sub-ring explode
-    halo_rows = sorted(
-        {(dtx + dx, dty + dy) for dtx, dty in big for dx in (-1, 0, 1) for dy in (-1, 0, 1)}
+    # page sub-cell → every occupied sub-cell whose 3×3 sub-ring holds it
+    # (≤ 9·n_cells rows, geometry-bounded); at s = 1 the tile halo map
+    ring_map = local_frame(
+        spark,
+        sorted(
+            (cx + dx, cy + dy, cx, cy)
+            for cx, cy in cells for dx in (-1, 0, 1) for dy in (-1, 0, 1)
+        ),
+        "pgx INT, pgy INT, sgx INT, sgy INT",
     )
-    halo_map = local_frame(spark, halo_rows, "ptx INT, pty INT")
     pgx = _axis_index(F.col("lon"), ox, step_x)
     pgy = _axis_index(F.col("lat"), oy, step_y)
-    p_sub = (
-        pages_t.join(F.broadcast(halo_map), on=["ptx", "pty"], how="inner")
-        .select(id_col, "lon", "lat", pgx.alias("pgx"), pgy.alias("pgy"))
-        .withColumn("__d", F.explode(F.array(*[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-        ])))
-        .select(
-            id_col, "lon", "lat",
-            (F.col("pgx") + F.col("__d.dx")).alias("sgx"),
-            (F.col("pgy") + F.col("__d.dy")).alias("sgy"),
-        )
-        .join(F.broadcast(qcells), on=["sgx", "sgy"], how="left_semi")
-    )
     p_part = (
-        p_sub.withColumn("sb", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
+        pages_t.select(id_col, "lon", "lat", pgx.alias("pgx"), pgy.alias("pgy"))
+        .join(F.broadcast(ring_map), on=["pgx", "pgy"], how="inner")
+        .withColumn("sb", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
         .select(
-            F.col("sgx").alias("dtx"),
-            F.col("sgy").alias("dty"),
+            "sgx",
+            "sgy",
             F.col("sb").cast("int"),
             F.lit(0).cast("tinyint").alias("role"),
             _zero_lit(qid_type).alias("qid"),
@@ -379,11 +393,14 @@ def _subcell_local_pass(
             F.col("lat").alias("y"),
         )
     )
-    kernel = _make_local_knn_kernel(k, guard_sq)
+    out_schema = (
+        f"qid {qid_type}, doc_id {id_type}, dist_sq DOUBLE, "
+        "rank INT, resolved BOOLEAN, q_lon DOUBLE, q_lat DOUBLE"
+    )
     return (
         q_part.unionByName(p_part)
-        .groupBy("dtx", "dty", "sb")
-        .applyInPandas(kernel, schema=out_schema)
+        .groupBy("sgx", "sgy", "sb")
+        .applyInPandas(_make_local_knn_kernel(k, guard_sq), schema=out_schema)
     )
 
 
@@ -392,7 +409,6 @@ def knn_join(
     queries_df: DataFrame,
     grid: GridSpec,
     k: int = 5,
-    r0: int = 1,
     id_col: str = "doc_id",
     query_id_col: str = "qid",
     max_r: int = 64,
@@ -412,6 +428,7 @@ def knn_join(
     silently trusting them.  A query whose ``max_r`` ring holds ZERO
     pages still emits one marker row (null doc_id/dist_sq/rank,
     exact=False) — no query ever silently disappears from the output.
+    Escalation starts at ring radius 1 and doubles.
 
     ``broadcast_queries=True`` (default) broadcasts the exploded query
     ring — right for a small query set.  ``False`` switches to a shuffle
@@ -423,26 +440,30 @@ def knn_join(
     holding n queries × n pages creates n² ring-join candidates no grid
     granularity can fix (finer tiles re-merge through the r=1 ring).
     Before the ring loop, two tiny per-tile count aggs estimate candidate
-    pairs per query tile (the count maps are bounded by the grid's
-    occupied-tile count — geometry-bounded, driver-safe to collect, NOT
-    data-sized); tiles above the cutoff are answered by a per-cell numpy
-    fine-grid index (one applyInPandas group per dense cell over its r0
-    page halo — the EXACT round-1 candidate set), emitting row-identical
-    results for queries the round-1 guarantee resolves and returning the
-    rest (halo-escaping queries) to the distributed escalation loop.
-    ``None`` disables the probe.  ``local_max_group_queries`` salts the
-    query side of a dense cell into hash buckets (halo pages replicated
-    per bucket) so one pandas group never holds more than ~that many
-    queries — memory stays bounded by the page halo.
+    pairs per query tile (query count × page count of its 3×3 halo; only
+    tiles above the cutoff are collected — geometry-bounded, NOT
+    data-sized).  Those dense tiles are answered by ONE local pass
+    (:func:`_local_pass`): a per-cell numpy fine-grid index inside one
+    applyInPandas group per dense cell over its r=1 page halo — the
+    EXACT round-1 candidate set — emitting row-identical results for the
+    queries the round-1 guarantee resolves and returning the rest
+    (halo-escaping queries) to the distributed escalation loop.  ``None``
+    disables the probe.
 
-    ``local_max_halo_pages``: when a dense tile's r0-halo PAGE count
-    itself exceeds this bound (the one failure mode query salting cannot
-    fix — the halo is replicated per bucket), the tile takes the
-    SUB-CELL split (:func:`_subcell_local_pass`): an s×s sub-grid with
-    s = ⌈√(halo/bound)⌉ re-runs the same kernel at sub-cell granularity
-    with the r=1 sub-ring guard, capping per-group memory at ~halo/s²
-    regardless of tile density; unresolved queries re-enter escalation
-    exactly as in the salted path.
+    ``local_max_group_queries`` salts the query side of a dense cell into
+    hash buckets (halo pages replicated per bucket) so one pandas group
+    never holds more than ~that many queries; the salt rule is in
+    :func:`_local_pass`.
+
+    ``local_max_halo_pages`` bounds the PAGE halo of one group, the one
+    failure mode query salting cannot fix.  The pass splits every dense
+    tile into an s×s sub-grid with one factor per call::
+
+        s = max(1, max over dense tiles of
+                   isqrt((ring_np - 1) // local_max_halo_pages) + 1)
+
+    so s = 1 (the tile itself) when every halo fits, and otherwise the
+    per-group memory is ~halo/s² regardless of tile density.
     """
     spark = pages_df.sparkSession
     size = min(abs(grid.tile_size[0]), abs(grid.tile_size[1]))
@@ -480,16 +501,15 @@ def knn_join(
     # ---- dense-cell local-index pass (PERF.md §15) --------------------
     if local_index_pairs is not None:
         # pair estimation stays DISTRIBUTED: per-tile count aggs, ring-
-        # expand the page counts (bounded (2r0+1)² fan-out of an already-
+        # expand the page counts (bounded 3×3 fan-out of an already-
         # aggregated table), join, filter.  Only tiles ABOVE the cutoff
         # are collected — each holds > local_index_pairs candidate pairs,
         # so the driver list is tiny by construction even when the tile
         # grid is fine enough that the full count map would be data-sized.
-        ring0 = [(dx, dy) for dx in range(-r0, r0 + 1) for dy in range(-r0, r0 + 1)]
         pc_df = pages_t.groupBy("ptx", "pty").agg(F.count("*").alias("np"))
         qc_df = pending.groupBy("qtx", "qty").agg(F.count("*").alias("nq"))
         ring_np = (
-            pc_df.crossJoin(F.broadcast(_ring_offsets(spark, r0)))
+            pc_df.crossJoin(F.broadcast(_ring_offsets(spark, 1)))
             .select(
                 (F.col("ptx") + F.col("dx")).alias("qtx"),
                 (F.col("pty") + F.col("dy")).alias("qty"),
@@ -504,101 +524,17 @@ def knn_join(
             .select("qtx", "qty", "nq", "ring_np")
             .collect()
         )
-        dense = [(r["qtx"], r["qty"]) for r in dense_rows]
-        qc = {(r["qtx"], r["qty"]): r["nq"] for r in dense_rows}
-        rnp = {(r["qtx"], r["qty"]): r["ring_np"] for r in dense_rows}
-        if dense:
-            id_type = dict(pages_t.dtypes)[id_col]
-            qid_type = dict(pending.dtypes)["qid"]
-            out_schema = (
-                f"qid {qid_type}, doc_id {id_type}, dist_sq DOUBLE, "
-                "rank INT, resolved BOOLEAN, q_lon DOUBLE, q_lat DOUBLE"
-            )
-            # a dense tile whose r0-HALO page count alone exceeds the
-            # per-group memory budget takes the SUB-CELL split path (the
-            # PERF.md §16 100-TB bound, closed): the query salt cannot
-            # shrink the halo, only a finer spatial key can
-            big = [t for t in dense if rnp[t] > local_max_halo_pages]
-            big_set = set(big)
-            small = [t for t in dense if t not in big_set]
+        if dense_rows:
+            dense = {(r["qtx"], r["qty"]): int(r["nq"]) for r in dense_rows}
             dense_df = local_frame(spark, sorted(dense), "dtx INT, dty INT")
-            locs = []
-
-            if small:
-                # salt serves TWO masters: (a) memory — cap queries per
-                # pandas group; (b) parallelism — a few dense cells must
-                # still fan out across the cluster (3 unsalted hot cells =
-                # 3 tasks; measured 52s → 10.6s at 100k×500k just from
-                # salting to ~2×cores).  Page halos are replicated per
-                # bucket, so cap the parallelism salt at ~1k queries/bucket
-                # to bound the duplication.
-                max_nq = max(qc[t] for t in small)
-                par = spark.sparkContext.defaultParallelism
-                salt_mem = -(-max_nq // local_max_group_queries)
-                salt_par = min(-(-2 * par // len(small)), max(1, max_nq // 1000))
-                salt = max(1, salt_mem, salt_par)
-                halo_rows = sorted(
-                    {(dtx, dty, dtx + dx, dty + dy) for dtx, dty in small for dx, dy in ring0}
-                )
-                halo_map = local_frame(spark, halo_rows, "dtx INT, dty INT, ptx INT, pty INT")
-                small_df = local_frame(spark, sorted(small), "dtx INT, dty INT")
-
-                q_part = (
-                    pending.join(
-                        F.broadcast(small_df),
-                        on=[
-                            pending["qtx"] == small_df["dtx"],
-                            pending["qty"] == small_df["dty"],
-                        ],
-                        how="inner",
-                    )
-                    .select(
-                        "dtx",
-                        "dty",
-                        F.pmod(F.xxhash64("qid"), F.lit(salt)).cast("int").alias("sb"),
-                        F.lit(1).cast("tinyint").alias("role"),
-                        F.col("qid"),
-                        _zero_lit(id_type).alias("doc_id"),
-                        F.col("q_lon").alias("x"),
-                        F.col("q_lat").alias("y"),
-                    )
-                )
-                p_part = (
-                    pages_t.join(F.broadcast(halo_map), on=["ptx", "pty"], how="inner")
-                    .withColumn("sb", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-                    .select(
-                        "dtx",
-                        "dty",
-                        F.col("sb").cast("int"),
-                        F.lit(0).cast("tinyint").alias("role"),
-                        _zero_lit(qid_type).alias("qid"),
-                        F.col(id_col).alias("doc_id"),
-                        F.col("lon").alias("x"),
-                        F.col("lat").alias("y"),
-                    )
-                )
-                kernel = _make_local_knn_kernel(k, float(r0 * size) ** 2)
-                locs.append(
-                    q_part.unionByName(p_part)
-                    .groupBy("dtx", "dty", "sb")
-                    .applyInPandas(kernel, schema=out_schema)
-                )
-
-            if big:
-                locs.append(
-                    _subcell_local_pass(
-                        spark, pending, pages_t, grid, big, rnp, k,
-                        id_col=id_col, id_type=id_type, qid_type=qid_type,
-                        out_schema=out_schema,
-                        local_max_halo_pages=local_max_halo_pages,
-                        local_max_group_queries=local_max_group_queries,
-                    )
-                )
-
-            loc = locs[0]
-            for extra in locs[1:]:
-                loc = loc.unionByName(extra)
-            loc = loc.localCheckpoint(eager=True)
+            s = max(
+                math.isqrt((int(r["ring_np"]) - 1) // int(local_max_halo_pages)) + 1
+                for r in dense_rows
+            )
+            loc = _local_pass(
+                spark, pending, pages_t, grid, dense, dense_df, s, k,
+                id_col=id_col, local_max_group_queries=local_max_group_queries,
+            ).localCheckpoint(eager=True)
             # The kernel's output schema names the id column 'doc_id'
             # internally; surface it under the caller's id_col so the
             # downstream selects/unionByName line up for any id_col.
@@ -623,7 +559,7 @@ def knn_join(
             if len(pending.take(1)) == 0:
                 return results
 
-    r = r0
+    r = 1
     while True:
         ring = _ring_offsets(spark, r)
         cand_tiles = (

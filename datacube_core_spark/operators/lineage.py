@@ -13,24 +13,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# closure levels joined per distributed job: each Spark action costs a
+# fixed ~0.3s of scheduling, so per-level actions dominate shallow closures
+_LEVELS_PER_JOB = 4
+
 
 def lineage_closure(
     edges: DataFrame,
     roots: DataFrame,
     max_depth: int = 20,
     direction: str = "sources",
-    levels_per_job: int = 4,
-    checkpoint_edges: bool = True,
 ) -> DataFrame:
     """All ancestors (``sources``) or descendants (``derived``) of roots.
 
     ``edges``: (dataset_id, source_id) rows.  ``roots``: (dataset_id).
     Returns (root_id, dataset_id, distance) — distance 0 is the root.
 
-    ``checkpoint_edges`` eagerly materializes the edge table once so the
-    fixpoint loop re-reads a local copy — right when edges fit executor
-    storage (they are (id, id) pairs, tiny relative to the data).  For a
-    huge edge table pass False and rely on shuffle reuse of the scan.
+    The edge table is materialized once, eagerly, so the fixpoint loop
+    re-reads a local copy (edges are (id, id) pairs, tiny relative to the
+    data).
     """
     if direction == "sources":
         frm, to = "dataset_id", "source_id"
@@ -47,15 +48,13 @@ def lineage_closure(
     # localCheckpoint truncates the growing plan lineage — without it each
     # fixpoint test re-executes every prior join and the loop goes
     # quadratic in depth.  Checkpoint + empty-check only every
-    # ``levels_per_job`` levels: each Spark action costs a fixed ~0.3s of
-    # scheduling, so per-level actions dominate shallow closures.
-    if checkpoint_edges:
-        edges = edges.localCheckpoint(eager=True)
+    # ``_LEVELS_PER_JOB`` levels.
+    edges = edges.localCheckpoint(eager=True)
     result = frontier.localCheckpoint(eager=True)
     frontier = result
     depth = 0
     while depth < max_depth:
-        batch_end = min(depth + levels_per_job, max_depth)
+        batch_end = min(depth + _LEVELS_PER_JOB, max_depth)
         new_steps = []
         step = frontier
         while depth < batch_end:
@@ -97,7 +96,6 @@ def lineage_paths(
     source_filter=None,
     datasets: DataFrame = None,
     id_col: str = "doc_id",
-    checkpoint_edges: bool = True,
 ) -> DataFrame:
     """Provenance traversal with PATH tracking and a source filter —
     full parity with the reference's recursive CTE
@@ -121,8 +119,7 @@ def lineage_paths(
     else:
         raise ValueError(direction)
 
-    if checkpoint_edges:
-        edges = edges.localCheckpoint(eager=True)
+    edges = edges.localCheckpoint(eager=True)
     frontier = roots.select(
         F.col("dataset_id").alias("root_id"),
         F.col("dataset_id").alias("node"),

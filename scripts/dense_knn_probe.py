@@ -3,9 +3,11 @@
 hot cluster itself, so ~n_q × n_p candidate pairs land in a handful of
 cells and the pure ring-join plan explodes (505 s measured in r4).
 
-Measures knn_join in shuffle mode with the local-index pass ON (default
-cutoff) vs OFF (local_index_pairs=None), asserts identical output rows at
-the small level, and reports walls at the big level.
+Measures knn_join in shuffle mode with the dense-cell local pass ON
+(default cutoff; its split factor s follows ``local_max_halo_pages``, so
+s = 1 unless a tile's page halo exceeds 4M) vs OFF
+(local_index_pairs=None), reports both walls and asserts the two row
+multisets are identical (a distributed EXCEPT ALL both ways).
 
 Usage: python scripts/dense_knn_probe.py [--repl 1000] [--cpus 32]
        [--skip-baseline]  (baseline = the 505s-class ring-join plan)
@@ -56,15 +58,16 @@ def main() -> None:
 
     def run(local_pairs):
         t0 = time.perf_counter()
-        n = knn_join(
+        df = knn_join(
             p, q, G, k=args.k, broadcast_queries=False, local_index_pairs=local_pairs
-        ).count()
-        return time.perf_counter() - t0, n
+        )
+        n = df.count()
+        return time.perf_counter() - t0, n, df
 
     with open("/proc/loadavg") as fh:
         load = fh.read().split()[0]
 
-    local_s, local_rows = run(4_000_000)
+    local_s, local_rows, local_df = run(4_000_000)
     out = {
         "probe": "dense_knn",
         "sf_dir": args.sf_dir,
@@ -77,11 +80,15 @@ def main() -> None:
         "local_rows": local_rows,
     }
     if not args.skip_baseline:
-        base_s, base_rows = run(None)
+        base_s, base_rows, base_df = run(None)
         out["ring_join_s"] = round(base_s, 1)
         out["ring_rows"] = base_rows
         out["speedup"] = round(base_s / local_s, 1)
-        assert base_rows == local_rows, (base_rows, local_rows)
+        out["rows_identical"] = (
+            base_df.exceptAll(local_df).isEmpty()
+            and local_df.exceptAll(base_df).isEmpty()
+        )
+        assert out["rows_identical"], (base_rows, local_rows)
     print(json.dumps(out))
     spark.stop()
 

@@ -1,17 +1,18 @@
 #!/usr/bin/env python
 """Oversized-halo kNN probe (VERDICT r5 item 5 / PERF.md §16 100-TB note):
 a SINGLE pathologically dense tile whose page halo alone would blow the
-per-group memory budget of the tile-level local-index pass (query salting
-replicates the full halo per bucket, so it cannot help).
+per-group memory budget of the dense-cell local pass at s = 1, one group
+per tile (query salting replicates the full halo per bucket, so it cannot
+help).
 
-Synthesizes n_pages clustered inside ONE grid tile (plus background),
-with the queries drawn from the same cluster, then runs the dense path
-twice:
+Synthesizes n_pages clustered inside ONE grid tile, with the queries
+drawn from the same cluster, then runs the one local pass twice, the
+split factor s chosen by ``local_max_halo_pages``:
 
-* tile-level pass (local_max_halo_pages high enough to keep the tile on
-  the salted path) — per-group page payload = the FULL halo;
-* sub-cell split (local_max_halo_pages small → s×s sub-grid) — per-group
-  payload ~halo/s².
+* s = 1 (a bound above the halo: one group per tile and salt bucket) —
+  per-group page payload = the FULL halo;
+* s > 1 (a bound below the halo → s×s sub-grid) — per-group payload
+  ~halo/s².
 
 Reports walls, the split factor, the per-group page bound implied by
 each plan, and asserts identical output rows (the exactness contract is
@@ -71,7 +72,7 @@ def main() -> None:
         .localCheckpoint(eager=True)
     )
     n_p, n_q = p.count(), q.count()
-    halo = n_p  # everything sits in one tile; its r0-halo is ~all pages
+    halo = n_p  # everything sits in one tile; its 3×3 halo is ~all pages
     s_split = math.isqrt(max(1, (halo - 1) // args.halo_budget)) + 1
 
     def run(halo_budget):

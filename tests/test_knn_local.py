@@ -255,3 +255,105 @@ def test_subcell_split_halo_escape(spark):
         local_index_pairs=0, local_max_halo_pages=10,
     )
     assert _rows(base) == _rows(split)
+
+
+def test_subcell_split_adjacent_dense_tiles_on_borders(spark, monkeypatch):
+    """Second halo shape for the sub-cell split: two ADJACENT dense tiles
+    split at s = 3, with pages on a lattice that puts points exactly on
+    every sub-cell and tile border, and queries on those borders, so the
+    3×3 sub-rings of the border sub-cells reach into the neighbouring
+    dense tile.  Row-identical to the ring-join plan."""
+    import datacube_core_spark.operators.knn as knn_mod
+
+    # 24 × 12 lattice at 1/12 spacing over tiles (0,0) and (1,0): x = i/12
+    # hits the sub-cell borders 1/3, 2/3, 4/3, 5/3 and the tile border 1.0
+    n = 24 * 12
+    rows = [
+        ((i * 37) % n, (i % 24) / 12.0, (i // 24) / 12.0) for i in range(n)
+    ]
+    p = spark.createDataFrame(rows, "doc_id LONG, lon DOUBLE, lat DOUBLE")
+    q_rows = [
+        (0, 1.0, 0.5),            # on the tile border
+        (1, 1.0 / 3, 1.0 / 3),    # sub-cell corner in tile (0,0)
+        (2, 2.0 / 3, 0.5),        # last sub-cell border before the tile border
+        (3, 0.99, 0.5),           # next to the tile border, nearest pages across it
+        (4, 1.01, 2.0 / 3),       # mirror, from tile (1,0)
+        (5, 4.0 / 3, 11.0 / 12),  # sub-cell border in tile (1,0), top row
+        (6, 5.0 / 3, 0.0),        # sub-cell border on the bottom edge
+        (7, 0.0, 0.0),            # tile corner
+        (8, 1.0, 0.0),            # shared corner of both dense tiles
+        (9, 1.0 + 1.0 / 24, 1.0 / 24),
+    ]
+    q = spark.createDataFrame(q_rows, "qid LONG, lon DOUBLE, lat DOUBLE")
+
+    seen = []
+    real = knn_mod._local_pass
+
+    def spy(spark_, pending, pages_t, grid, dense, dense_df, s, *a, **kw):
+        seen.append((sorted(dense), s))
+        return real(spark_, pending, pages_t, grid, dense, dense_df, s, *a, **kw)
+
+    monkeypatch.setattr(knn_mod, "_local_pass", spy)
+    base = knn_join(p, q, GRID, k=5, broadcast_queries=False, local_index_pairs=None)
+    # both tiles' 3×3 halos hold all n pages: (n-1)//32 = 8 → s = isqrt(8)+1 = 3
+    split = knn_join(
+        p, q, GRID, k=5, broadcast_queries=False,
+        local_index_pairs=0, local_max_halo_pages=n // 9,
+    )
+    got = _rows(split)
+    assert seen == [([(0, 0), (1, 0)], 3)]
+    assert got == _rows(base)
+    assert len(got) == 5 * len(q_rows)
+
+
+def test_mixed_dense_set_runs_one_local_pass(spark, pages_df, monkeypatch):
+    """A dense set whose halos straddle ``local_max_halo_pages`` (the split
+    of ``test_subcell_split_mixed_with_salted_tiles``) runs ONE pandas
+    group pass: the checkpointed local-pass frame has exactly one
+    FlatMapGroupsInPandas node in its executed plan."""
+    q = pages_df.where(F.col("doc_id") % 251 == 0).select(
+        F.col("doc_id").alias("qid"), "lon", "lat"
+    )
+    counts = (
+        pages_df.groupBy(F.floor(F.col("lon")).alias("tx"), F.floor(F.col("lat")).alias("ty"))
+        .count().agg(F.expr("percentile(count, 0.5)")).collect()[0][0]
+    )
+    bound = int(counts * 3)
+    # the shape must really be mixed: some query tile's 3×3 page halo
+    # fits the bound and some other one exceeds it
+    tiles = pages_df.select(
+        F.floor("lon").cast("int").alias("tx"), F.floor("lat").cast("int").alias("ty")
+    ).groupBy("tx", "ty").count().collect()
+    tc = {(r["tx"], r["ty"]): r["count"] for r in tiles}
+    qt = {
+        (r["tx"], r["ty"])
+        for r in q.select(
+            F.floor("lon").cast("int").alias("tx"), F.floor("lat").cast("int").alias("ty")
+        ).distinct().collect()
+    }
+    halos = [
+        sum(tc.get((x + dx, y + dy), 0) for dx in (-1, 0, 1) for dy in (-1, 0, 1))
+        for x, y in qt
+    ]
+    assert min(halos) <= bound < max(halos)
+
+    plans = []
+    cls = type(pages_df)
+    real = cls.localCheckpoint
+
+    def spy(self, eager=True, *a, **kw):
+        out = real(self, eager, *a, **kw)
+        if eager:
+            plan = self._jdf.queryExecution().executedPlan().toString()
+            current = plan.split("Initial Plan")[0]
+            if "FlatMapGroupsInPandas" in current:
+                plans.append(current)
+        return out
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    knn_join(
+        pages_df, q, GRID, k=3, broadcast_queries=False,
+        local_index_pairs=0, local_max_halo_pages=bound,
+    ).collect()
+    assert len(plans) == 1
+    assert plans[0].count("FlatMapGroupsInPandas") == 1
