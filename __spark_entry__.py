@@ -82,7 +82,7 @@ def _ghpip_index(spark: SparkSession):
 
 def _dateline_index(spark: SparkSession):
     return _session_memo(
-        spark, "dateline", lambda: PipIndex(spark, _dateline_regions(spark, 0), _G, distributed_classify=False)
+        spark, "dateline", lambda: PipIndex(spark, _dateline_regions(spark, 0), _G)
     )
 
 
@@ -1228,8 +1228,7 @@ def q_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     p = pages(spark, sf_dir, repl=Q_REPL)
     edges = page_edges(p).localCheckpoint(eager=False)  # extract once, not per level
-    nodes = p.select("doc_id").localCheckpoint(eager=False)  # derive once
-    hc = harmonic_centrality(edges, nodes, radius=4)
+    hc = harmonic_centrality(edges, p.select("doc_id"), radius=4)
     return hc.select(
         "doc_id", "reach", F.col("hc_num").alias("hc_x12"),
         (F.col("hc_num") / F.lit(12.0)).alias("hc"),
@@ -1496,8 +1495,7 @@ def q_link_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     p = pages(spark, sf_dir, repl=Q_REPL)
     edges = page_edges(p).where((F.col("src") % 97) == (F.col("dst") % 97))
-    nodes = p.select("doc_id").localCheckpoint(eager=False)  # derive once
-    cc = connected_components(edges, nodes)
+    cc = connected_components(edges, p.select("doc_id"))
     return cc.select(
         "doc_id",
         (F.col("doc_id") % 97).alias("host_id"),

@@ -41,7 +41,7 @@ class GeohashPipIndex(_CoveringIndex):
     """Build-once geohash covering index of a region table (same
     ``region_id`` + packed-multipolygon ``geom`` contract as PipIndex /
     S2PipIndex; driver loop below the shared build threshold, executor
-    ``mapInPandas`` above it, ``distributed_cover`` forces either)."""
+    ``mapInPandas`` above it)."""
 
     _KEY_TYPE = "STRING"
 
@@ -51,10 +51,9 @@ class GeohashPipIndex(_CoveringIndex):
         regions_df: DataFrame,
         target_cells_per_axis: int = 8,
         precision: Optional[int] = None,
-        distributed_cover: Optional[bool] = None,
     ):
         cover = functools.partial(_gh_cover, int(target_cells_per_axis), precision)
-        self._build(spark, regions_df, cover, distributed_cover)
+        self._build(spark, regions_df, cover)
 
     def _with_leaf(self, df: DataFrame, lon: str, lat: str) -> DataFrame:
         return df.withColumn(_LEAF, geohash_col(F.col(lon), F.col(lat), MAX_PRECISION))

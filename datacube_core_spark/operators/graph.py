@@ -1,11 +1,14 @@
-"""Web-graph analytics: link extraction → edge list → exact PageRank.
+"""Web-graph analytics over the page link graph: edge extraction,
+PageRank / TrustRank / HITS, bounded harmonic centrality, HyperBall
+sketches, deterministic random walks and connected components.
 
 Large-scale corpus curation uses link-graph signals (Common Crawl ranks
 hosts by harmonic centrality; PageRank-family scores feed crawl
-frontiers and quality filters).  This module builds the edge list from
-the ACTUAL ``html`` anchors (``functions/html.extract_outlinks_col`` —
-not re-derived arithmetically; the DuckDB oracle re-derives it, which is
-what makes the extraction verifiable) and computes PageRank.
+frontiers and quality filters).  The edge list comes from the ACTUAL
+``html`` anchors (``functions/html.extract_outlinks_col`` — not
+re-derived arithmetically; the DuckDB oracle re-derives it, which is
+what makes the extraction verifiable).  Each exact operator has a
+DuckDB twin (``sql_*``): an unrolled CTE chain or a recursive CTE.
 
 Exact integer arithmetic (the cross-engine trick): the synthetic graph
 has UNIFORM outdegree 3 and no dangling nodes, so with damping
@@ -21,15 +24,22 @@ scales to integers via  r_i = A_i / (N · 60^i),  A_0 = 1:
 depths used (60^6·N ≈ 4e14 at N = 8000) and every engine produces the
 IDENTICAL integers — no float summation-order sensitivity, no tolerance.
 The float rank is one final divide by the constant N·60^i (bit-identical
-everywhere).  A general-outdegree float PageRank exists alongside for
-real graphs (``pagerank_float``), sharing the same join/agg plan.
+everywhere).  TrustRank gates the 9·60^i teleport term by a seed
+indicator; PageRank is its every-node-seeded case.  HITS is the same
+sum without teleport, run once per direction; ``pagerank_float`` is the
+general-outdegree float variant for real graphs.
 
-Scale shape: each iteration is one shuffle (groupBy dst) plus a
-broadcast-or-shuffle join of ranks onto edges — the canonical Spark
-PageRank plan.  Hot pages (high indegree) are plain aggregation skew,
-handled by AQE/salting like any groupBy; iterations are a fixed small
-count, so no lineage blow-up (checkpoint hooks not needed below ~20
-rounds; ``operators/lineage.py`` shows the truncation pattern if more).
+Scale shape: all four rank operators build each round from ONE step
+(``_push_sums``): a join of the current values onto the edges at one
+endpoint, a groupBy of the other endpoint (one shuffle, map-side
+combine), and a left join of the sums onto every node — the canonical
+Spark PageRank plan.  Hot pages (high indegree) are plain aggregation
+skew, handled by AQE like any groupBy.  Lineage is truncated with
+per-round ``localCheckpoint`` where a round's output feeds more than one
+consumer: the harmonic BFS levels, HyperBall registers, random-walk
+frontiers, ``pagerank_float``'s ranks and the component labeling
+(``operators/dedup.dup_clusters``); the exact rank operators run a
+fixed small number of rounds and take a materialized ``edges``.
 
 Reference analog: none — ODC has no graph ops; this is webtext-axis
 capability (SURVEY §2's training-data-pipeline extension family).
@@ -86,36 +96,56 @@ def resolved_link_edges(
     )
 
 
+def _push_sums(edges: DataFrame, values: DataFrame, term: "F.Column", node_vals: DataFrame,
+               frm: str = "src", to: str = "dst") -> DataFrame:
+    """One propagation step, the round the four rank operators below are
+    built from: join ``edges`` to ``values`` (keyed ``v``) on the ``frm``
+    endpoint, sum ``term`` at the ``to`` endpoint, and left-join the sums
+    onto ``node_vals`` (keyed ``v``) as column ``s`` — 0 for a node no
+    edge reaches.  Returns ``node_vals``' columns plus ``s``.
+
+    Plan: one edges⋈values join, one groupBy(``to``) partial-agg shuffle,
+    one nodes⋈sums left join — the canonical Spark PageRank round."""
+    sums = (
+        edges.join(values, edges[frm] == values["v"], "inner")
+        .groupBy(to)
+        .agg(F.sum(term).alias("s"))
+    )
+    return node_vals.join(sums, node_vals["v"] == sums[to], "left").select(
+        *node_vals.columns, F.coalesce(F.col("s"), F.lit(0)).alias("s")
+    )
+
+
+def _seeded_rank(edges: DataFrame, vs: DataFrame, iters: int, id_col: str) -> DataFrame:
+    """The exact-integer seeded recurrence over ``vs`` = (v, t), t the
+    teleport indicator [v ∈ S]:
+
+        A_0(v) = t(v);   A_{i+1}(v) = 9·60^i·t(v) + 17·Σ_{u→v} A_i(u)"""
+    if iters < 0:
+        raise ValueError("iters must be >= 0")
+    ranks = vs.select("v", F.col("t").alias("a"))
+    for i in range(iters):
+        ranks = _push_sums(edges, ranks, F.col("a"), vs).select(
+            "v", (F.lit(9 * SCALE**i) * F.col("t") + F.lit(DAMP_NUM) * F.col("s")).alias("a")
+        )
+    return ranks.select(F.col("v").alias(id_col), "a")
+
+
 def pagerank_exact(edges: DataFrame, nodes: DataFrame, iters: int = 5,
                    id_col: str = "doc_id") -> DataFrame:
     """Integer PageRank over a uniform-outdegree-3 dangling-free graph.
 
     Returns (id_col, a) with a = A_iters(v); rank(v) = a / (N·60^iters).
-    Every value is exact int64 — engines agree bit-for-bit.
+    Every value is exact int64 — engines agree bit-for-bit.  This is
+    :func:`trustrank_exact` with every node seeded; the teleport
+    indicator is the constant 1, so no seed join is planned.
 
     ``edges`` is referenced once per round in one job — pass a
     materialized DataFrame (``localCheckpoint``) when it is derived from
     an expensive extraction, or the extraction replays every round.
     """
-    if iters < 0:
-        raise ValueError("iters must be >= 0")
-    ranks = nodes.select(F.col(id_col).alias("v"), F.lit(1).cast("long").alias("a"))
-    for i in range(iters):
-        base = 9 * SCALE**i
-        contrib = (
-            edges.join(ranks, edges["src"] == ranks["v"], "inner")
-            .groupBy("dst")
-            .agg(F.sum("a").alias("s"))
-        )
-        ranks = (
-            nodes.select(F.col(id_col).alias("v"))
-            .join(contrib, F.col("v") == contrib["dst"], "left")
-            .select(
-                "v",
-                (F.lit(base) + F.lit(DAMP_NUM) * F.coalesce(F.col("s"), F.lit(0))).alias("a"),
-            )
-        )
-    return ranks.select(F.col("v").alias(id_col), "a")
+    vs = nodes.select(F.col(id_col).alias("v"), F.lit(1).cast("long").alias("t"))
+    return _seeded_rank(edges, vs, iters, id_col)
 
 
 def trustrank_exact(edges: DataFrame, nodes: DataFrame, seeds: DataFrame,
@@ -132,33 +162,13 @@ def trustrank_exact(edges: DataFrame, nodes: DataFrame, seeds: DataFrame,
     60^i·|S| (the pagerank invariant scaled by |S|), so values stay
     int64-safe for the same depths and trust(v) = A_iters / (|S|·60^iters)
     is a display-time divide.  Returns (id_col, a)."""
-    if iters < 0:
-        raise ValueError("iters must be >= 0")
     seed_flag = seeds.select(F.col(id_col).alias("v"), F.lit(1).alias("__seed"))
     vs = (
         nodes.select(F.col(id_col).alias("v"))
         .join(seed_flag, "v", "left")
         .select("v", F.coalesce(F.col("__seed"), F.lit(0)).cast("long").alias("t"))
     )
-    ranks = vs.select("v", F.col("t").alias("a"))
-    for i in range(iters):
-        base = 9 * SCALE**i
-        contrib = (
-            edges.join(ranks, edges["src"] == ranks["v"], "inner")
-            .groupBy("dst")
-            .agg(F.sum("a").alias("s"))
-        )
-        ranks = (
-            vs.join(contrib, vs["v"] == contrib["dst"], "left")
-            .select(
-                "v",
-                (
-                    F.lit(base) * F.col("t")
-                    + F.lit(DAMP_NUM) * F.coalesce(F.col("s"), F.lit(0))
-                ).alias("a"),
-            )
-        )
-    return ranks.select(F.col("v").alias(id_col), "a")
+    return _seeded_rank(edges, vs, iters, id_col)
 
 
 def sql_trustrank_levels(edges_cte: str, nodes_cte: str, seeds_cte: str,
@@ -216,28 +226,13 @@ def hits_exact(edges: DataFrame, nodes: DataFrame, iters: int = 3,
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    h = nodes.select(F.col(id_col).alias("v"), F.lit(1).cast("long").alias("h"))
+    vs = nodes.select(F.col(id_col).alias("v"))
+    h = vs.select("v", F.lit(1).cast("long").alias("h"))
     a = None
     for _ in range(iters):
-        a = (
-            edges.join(h, edges["src"] == h["v"], "inner")
-            .groupBy("dst")
-            .agg(F.sum("h").alias("s"))
-        )
-        a = (
-            nodes.select(F.col(id_col).alias("v"))
-            .join(a, F.col("v") == a["dst"], "left")
-            .select("v", F.coalesce(F.col("s"), F.lit(0)).cast("long").alias("a"))
-        )
-        h = (
-            edges.join(a, edges["dst"] == a["v"], "inner")
-            .groupBy("src")
-            .agg(F.sum("a").alias("s"))
-        )
-        h = (
-            nodes.select(F.col(id_col).alias("v"))
-            .join(h, F.col("v") == h["src"], "left")
-            .select("v", F.coalesce(F.col("s"), F.lit(0)).cast("long").alias("h"))
+        a = _push_sums(edges, h, F.col("h"), vs).select("v", F.col("s").cast("long").alias("a"))
+        h = _push_sums(edges, a, F.col("a"), vs, frm="dst", to="src").select(
+            "v", F.col("s").cast("long").alias("h")
         )
     return a.join(h, "v").select(F.col("v").alias(id_col), "a", "h")
 
@@ -443,7 +438,8 @@ def pagerank_float(edges: DataFrame, nodes: DataFrame, iters: int = 10,
     n_b = nodes.count()
     out = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     e = edges.join(out, "src").localCheckpoint(eager=False)
-    ranks = nodes.select(F.col(id_col).alias("v"), F.lit(1.0 / n_b).alias("r"))
+    vs = nodes.select(F.col(id_col).alias("v"))
+    ranks = vs.select("v", F.lit(1.0 / n_b).alias("r"))
     for _ in range(iters):
         # truncate lineage each round: the dangling-mass collect below
         # otherwise replays the whole rank history (O(iters^2) work),
@@ -455,19 +451,9 @@ def pagerank_float(edges: DataFrame, nodes: DataFrame, iters: int = 10,
             .collect()[0][0]
             or 0.0
         )
-        contrib = (
-            e.join(ranks, e["src"] == ranks["v"], "inner")
-            .groupBy("dst")
-            .agg(F.sum(F.col("r") / F.col("outdeg")).alias("s"))
-        )
         base = (1.0 - damping) / n_b + damping * dangling / n_b
-        ranks = (
-            nodes.select(F.col(id_col).alias("v"))
-            .join(contrib, F.col("v") == contrib["dst"], "left")
-            .select(
-                "v",
-                (F.lit(base) + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))).alias("r"),
-            )
+        ranks = _push_sums(e, ranks, F.col("r") / F.col("outdeg"), vs).select(
+            "v", (F.lit(base) + F.lit(damping) * F.col("s")).alias("r")
         )
     return ranks.select(F.col("v").alias(id_col), "r")
 

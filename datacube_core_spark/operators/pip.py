@@ -70,7 +70,6 @@ def _build_table(
     rows_of: Callable[[int, bytes], List[tuple]],
     schema: str,
     tier_cols: Tuple[str, ...],
-    distributed: Optional[bool],
 ):
     """Run ``rows_of(region_id, blob)`` over every region; the LAST field
     of each row is its generic-band flag (only the exact refine can decide
@@ -80,20 +79,17 @@ def _build_table(
     of regions with a generic-band row — the refine kernel's whole working
     set — and ``bc_geoms`` is its broadcast (None when empty).
 
-    Below ``_DISTRIBUTED_BUILD_THRESHOLD`` regions (``distributed=None``
-    decides by a limit-probe, not a full count: the build mode of a
-    10^6-region table must not cost a full scan of it) the rows come from
-    a driver loop.  Above it they come from a one-off executor job that
-    stays DISTRIBUTED (localCheckpoint materializes it once): the driver
-    collects only the tier facts and the generic blobs, so driver memory
-    scales with |generic|, not |regions| — rect regions' WKB never leaves
-    the executors."""
+    Up to ``_DISTRIBUTED_BUILD_THRESHOLD`` regions (decided by a
+    limit-probe, not a full count: the build mode of a 10^6-region table
+    must not cost a full scan of it) the rows come from a driver loop.
+    Above it they come from a one-off executor job that stays DISTRIBUTED
+    (localCheckpoint materializes it once): the driver collects only the
+    tier facts and the generic blobs, so driver memory scales with
+    |generic|, not |regions| — rect regions' WKB never leaves the
+    executors."""
     cols = [f.split()[0] for f in schema.split(",")]
-    if distributed is None:
-        thresh = _DISTRIBUTED_BUILD_THRESHOLD
-        distributed = regions_df.select(F.lit(1)).limit(thresh + 1).count() > thresh
-
-    if not distributed:
+    thresh = _DISTRIBUTED_BUILD_THRESHOLD
+    if regions_df.select(F.lit(1)).limit(thresh + 1).count() <= thresh:
         rows: List[tuple] = []
         geom_map: Dict[int, bytes] = {}
         for r in sorted(regions_df.select("region_id", "geom").collect(), key=lambda r: r["region_id"]):
@@ -235,14 +231,14 @@ class _CoveringIndex:
 
     _KEY_TYPE: str
 
-    def _build(self, spark, regions_df: DataFrame, cover, distributed: Optional[bool]) -> None:
+    def _build(self, spark, regions_df: DataFrame, cover) -> None:
         schema = (
             f"region_id INT, lv INT, cell {self._KEY_TYPE}, interior BOOLEAN, "
             "r_left DOUBLE, r_bottom DOUBLE, r_right DOUBLE, r_top DOUBLE, generic BOOLEAN"
         )
         table, tiers, self.geom_map, self._bc_geoms = _build_table(
             spark, regions_df, functools.partial(_covering_rows, cover), schema,
-            ("lv", "generic"), distributed,
+            ("lv", "generic"),
         )
         self._table = table
         self.levels = sorted({lv for lv, _ in tiers})
@@ -367,7 +363,6 @@ class PipIndex(_CoveringIndex):
         regions_df: DataFrame,
         grid: GridSpec,
         target_cells_per_axis: int = 48,
-        distributed_classify: Optional[bool] = None,
     ):
         self.grid = grid
         size_y, size_x = grid.tile_size
@@ -380,7 +375,7 @@ class PipIndex(_CoveringIndex):
             _lattice_cover, self._base_x, self._base_y, self.ox, self.oy,
             self.target_cells, self.MIN_LEVEL, self.MAX_LEVEL,
         )
-        self._build(spark, regions_df, cover, distributed_classify)
+        self._build(spark, regions_df, cover)
 
     def _with_leaf(self, df: DataFrame, lon: str, lat: str) -> DataFrame:
         # the build's floor rule at MAX_LEVEL; h = base / 2^L is exact

@@ -65,7 +65,7 @@ class S2PipIndex(_CoveringIndex):
     ``regions_df`` must carry ``region_id`` and a packed-multipolygon
     ``geom`` column (same contract as PipIndex).  The covering is built in
     a driver loop for small region tables and on the executors above the
-    shared build threshold (``distributed_cover`` forces either mode).
+    shared build threshold (``operators.pip._DISTRIBUTED_BUILD_THRESHOLD``).
 
     ``max_cells`` switches per-region coverings to the MIXED-LEVEL
     budgeted coverer (``s2_covering_budgeted`` — the S2RegionCoverer
@@ -82,11 +82,10 @@ class S2PipIndex(_CoveringIndex):
         regions_df: DataFrame,
         target_cells_per_axis: int = 8,
         level: Optional[int] = None,
-        distributed_cover: Optional[bool] = None,
         max_cells: Optional[int] = None,
     ):
         cover = functools.partial(_s2_cover, int(target_cells_per_axis), level, max_cells)
-        self._build(spark, regions_df, cover, distributed_cover)
+        self._build(spark, regions_df, cover)
 
     def _with_leaf(self, df: DataFrame, lon: str, lat: str) -> DataFrame:
         return with_s2_cell(df, level=MAX_LEVEL, lon_col=lon, lat_col=lat, out_col=_LEAF)

@@ -18,8 +18,6 @@ identical inputs).
 
 from __future__ import annotations
 
-from typing import List, Sequence
-
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -29,43 +27,17 @@ def _dvec(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def dot_col(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Sequential left-fold dot product in double (deterministic order).
-
-    With ``dim`` given, unrolls to an explicit left-associated sum of
-    products; measured SLOWER than the fold here (the 64-term getItem
-    tree blows past codegen limits), so callers default to the fold —
-    kept because the two forms are bit-identical (same addition order)
-    and the unrolled one can win for small dims."""
-    if dim is not None:
-        # start from 0.0 exactly like the fold (guards the -0.0 corner:
-        # 0.0 + -0.0 == +0.0, while a bare first term could keep -0.0)
-        acc = F.lit(0.0) + a.getItem(0) * b.getItem(0)
-        for i in range(1, dim):
-            acc = acc + a.getItem(i) * b.getItem(i)
-        return acc
+def dot_col(a: Column, b: Column) -> Column:
+    """Sequential left-fold dot product in double (deterministic order):
+    the Catalyst form of :func:`_seq_dot` and of the ``sql_*`` twins'
+    ``list_dot_product``."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
 
 
-def norm_col(a: Column, dim: int | None = None) -> Column:
-    return F.sqrt(dot_col(a, a, dim))
-
-
-def with_unit_vec(df: DataFrame, vec_col: str = "embedding", out_col: str = "uvec") -> DataFrame:
-    v = _dvec(F.col(vec_col))
-    n = norm_col(v)
-    unit = F.when(n > 0, F.transform(v, lambda x: x / n)).otherwise(v)
-    return df.withColumn(out_col, unit)
-
-
-def cosine_col(a: Column, b: Column) -> Column:
-    """cos = dot/(|a||b|), 0 for zero vectors; operand order fixed for
-    cross-engine bit parity."""
-    num = dot_col(a, b)
-    den = norm_col(a) * norm_col(b)
-    return F.when(den > 0, num / den).otherwise(F.lit(0.0))
+def norm_col(a: Column) -> Column:
+    return F.sqrt(dot_col(a, a))
 
 
 # ---------------------------------------------------------------------------
@@ -73,8 +45,9 @@ def cosine_col(a: Column, b: Column) -> Column:
 #
 # The Catalyst higher-order ``aggregate(zip_with(...))`` fold above is
 # interpreted per row-pair (no whole-stage codegen for HOFs) — measured as
-# the dominant cost of every similarity operator.  These Arrow kernels
-# compute the IDENTICAL left fold vectorized over rows: the dim loop runs
+# the dominant cost of the bucketed similarity operators (only
+# ``brute_force_topk`` keeps it).  These Arrow kernels compute the
+# IDENTICAL left fold vectorized over rows: the dim loop runs
 # ``acc = acc + (a_i * b_i)`` as elementwise numpy ops, so each row's
 # result is the same correctly-rounded IEEE sequence the Catalyst fold
 # (and the DuckDB twin's list_dot_product oracle contract) produces —
@@ -109,8 +82,8 @@ def _seq_dot_const(a: np.ndarray, c: np.ndarray) -> np.ndarray:
 
 def _pair_cos_udf():
     """pandas UDF: cos = dot/(na*nb) with the sequential-fold dot,
-    0.0 when the denominator is not > 0 — same op order as
-    :func:`cosine_col` / the oracle twins, batch-evaluated."""
+    0.0 when the denominator is not > 0 — same op order as the
+    ``sql_*`` twins' ``_sql_cos``, batch-evaluated."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -128,8 +101,8 @@ def _pair_cos_udf():
 
 def _ivf_dists(v: np.ndarray, cent: np.ndarray) -> tuple:
     """(x², D) where D[:, j] = (x² − 2·(v·c_j)) + |c_j|², every term in
-    the exact order of :func:`_dist2_cols` (|c_j|² is the same
-    ``float(np.dot(c, c))`` literal the Catalyst/SQL dialects embed)."""
+    the exact order of the ``sql_ivf_topk`` / ``sql_semdedup`` twins
+    (|c_j|² is the same ``float(np.dot(c, c))`` literal they embed)."""
     c2 = [float(np.dot(c, c)) for c in cent]
     x2 = _seq_dot(v, v)
     d = np.empty((v.shape[0], len(cent)), dtype=np.float64)
@@ -151,8 +124,9 @@ def _schema_plus(df: DataFrame, *fields: str):
 
 def _with_ivf_assign(df: DataFrame, cent: np.ndarray, vec_col: str,
                      norm_name: str | None = None) -> DataFrame:
-    """mapInPandas twin of :func:`ivf_assign_col` (+ optional norm):
-    1-based argmin list id, first-min tie-break like array_position."""
+    """IVF list assignment (+ optional norm) as a mapInPandas kernel over
+    :func:`_ivf_dists`: 1-based argmin list id, first-min tie-break like
+    the twins' ``list_position(ds, list_min(ds))``."""
     cent = np.asarray(cent, dtype=np.float64)
     extra = ["lst int"] + ([f"{norm_name} double"] if norm_name else [])
     schema = _schema_plus(df, *extra)
@@ -205,26 +179,12 @@ def _ivf_probe_rows(df: DataFrame, cent: np.ndarray, n_probe: int,
     return df.mapInPandas(fn, schema)
 
 
-def _with_norm(df: DataFrame, vec_col: str, norm_name: str) -> DataFrame:
-    """mapInPandas twin of :func:`norm_col`: sqrt of the sequential-fold
-    self-dot."""
-    schema = _schema_plus(df, f"{norm_name} double")
-
-    def fn(it):
-        for pdf in it:
-            v = _mat(pdf[vec_col])
-            out = pdf.copy()
-            out[norm_name] = np.sqrt(_seq_dot(v, v)) if len(pdf) else np.zeros(0)
-            yield out
-
-    return df.mapInPandas(fn, schema)
-
-
 def _with_lsh_code(df: DataFrame, planes: np.ndarray, vec_col: str,
                    code_name: str = "code",
                    norm_name: str | None = None) -> DataFrame:
-    """mapInPandas twin of :func:`lsh_code_col` (+ optional norm):
-    bit i set iff the sequential-fold ``v · plane_i`` is >= 0."""
+    """Sign-bit LSH code (+ optional norm) as a mapInPandas kernel: bit i
+    set iff the sequential-fold ``v · plane_i`` (:func:`_seq_dot_const`)
+    is >= 0 — the code :func:`sql_lsh_code` computes in DuckDB."""
     planes = np.asarray(planes, dtype=np.float64)
     extra = [f"{code_name} long"] + ([f"{norm_name} double"] if norm_name else [])
     schema = _schema_plus(df, *extra)
@@ -253,7 +213,6 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "qid",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k: (qid, vec_id, cos_sim, rank).
 
@@ -267,12 +226,12 @@ def brute_force_topk(
     # interpreted fold beat the Arrow kernel round-trip (r7: 0.92s vs
     # 1.54s) — the vectorized path wins only on the big bucketed joins.
     v = vectors.select(F.col(id_col).alias("vec_id"), _dvec(F.col(vec_col)).alias("v"))
-    v = v.withColumn("na", norm_col(F.col("v"), dim))
+    v = v.withColumn("na", norm_col(F.col("v")))
     q = queries.select(F.col(query_id_col).alias("qid"), _dvec(F.col(vec_col)).alias("qv"))
-    q = q.withColumn("nb", norm_col(F.col("qv"), dim))
+    q = q.withColumn("nb", norm_col(F.col("qv")))
     pairs = v.crossJoin(F.broadcast(q))
     den = F.col("na") * F.col("nb")
-    cos = F.when(den > 0, dot_col(F.col("v"), F.col("qv"), dim) / den).otherwise(F.lit(0.0))
+    cos = F.when(den > 0, dot_col(F.col("v"), F.col("qv")) / den).otherwise(F.lit(0.0))
     w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
     return (
         pairs.select("qid", "vec_id", cos.alias("cos_sim"))
@@ -288,19 +247,6 @@ def brute_force_topk(
 def _hyperplanes(dim: int, n_bits: int, seed: int = 42) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_bits, dim))
-
-
-def lsh_code_col(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-bit code: bit i = (vec · plane_i) >= 0 (pure Catalyst)."""
-    bits = []
-    for i, plane in enumerate(planes):
-        arr = F.array(*[F.lit(float(w)) for w in plane])
-        d = dot_col(vec, arr)
-        bits.append(F.when(d >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long")))
-    code = bits[0]
-    for b in bits[1:]:
-        code = code + b
-    return code
 
 
 def lsh_topk(
@@ -383,7 +329,8 @@ def _sql_double(x: float) -> str:
 
 
 def sql_lsh_code(e_expr: str, planes: np.ndarray) -> str:
-    """DuckDB twin of :func:`lsh_code_col` for a DOUBLE[] expression."""
+    """Sign-bit LSH code for a DOUBLE[] expression: the DuckDB twin of
+    :func:`_with_lsh_code`."""
     terms = []
     for i, plane in enumerate(planes):
         arr = "[" + ", ".join(_sql_double(w) for w in plane) + "]"
@@ -438,6 +385,22 @@ WHERE {cos} >= {threshold}
 # the DuckDB twin reproduces cluster assignment bit-for-bit.
 # ---------------------------------------------------------------------------
 
+def _lloyd(x: np.ndarray, k: int, iters: int, seed: int) -> np.ndarray:
+    """Deterministic Lloyd k-means over the rows of ``x``: ``k`` distinct
+    seeded rows start, then ``iters`` assign/mean rounds (an empty
+    cluster keeps its centroid)."""
+    rng = np.random.default_rng(seed)
+    cent = x[rng.choice(len(x), size=k, replace=False)]
+    for _ in range(iters):
+        d2 = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+        assign = d2.argmin(axis=1)
+        for j in range(k):
+            m = assign == j
+            if m.any():
+                cent[j] = x[m].mean(axis=0)
+    return cent
+
+
 def train_centroids(
     vectors: DataFrame,
     k: int = 16,
@@ -451,37 +414,7 @@ def train_centroids(
     table — at 100 TB you train the quantizer on a sample, never the full
     table; assignment stays distributed."""
     rows = vectors.select(vec_col).limit(sample_limit).collect()
-    x = np.asarray([list(r[0]) for r in rows], dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    cent = x[rng.choice(len(x), size=k, replace=False)]
-    for _ in range(iters):
-        d2 = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        for j in range(k):
-            m = assign == j
-            if m.any():
-                cent[j] = x[m].mean(axis=0)
-    return cent
-
-
-def _dist2_cols(vec: Column, cent: np.ndarray) -> List[Column]:
-    """Squared distance to each centroid: ||x||² − 2·x·c + ||c||² with the
-    literal parts precomputed — one fold per centroid, same op order as
-    the SQL twin."""
-    x2 = dot_col(vec, vec)
-    out = []
-    for c in cent:
-        arr = F.array(*[F.lit(float(w)) for w in c])
-        c2 = float(np.dot(c, c))
-        out.append(x2 - F.lit(2.0) * dot_col(vec, arr) + F.lit(c2))
-    return out
-
-
-def ivf_assign_col(vec: Column, cent: np.ndarray) -> Column:
-    """argmin centroid index (1-based to mirror DuckDB list_position)."""
-    ds = _dist2_cols(vec, cent)
-    arr = F.array(*ds)
-    return F.array_position(arr, F.array_min(arr)).cast("int")
+    return _lloyd(np.asarray([list(r[0]) for r in rows], dtype=np.float64), k, iters, seed)
 
 
 def ivf_topk(
@@ -574,15 +507,7 @@ def ivf_centroids_fixture(
 
     t = pq.read_table(path, columns=["embedding"])
     x = np.asarray(t.column("embedding").to_pylist(), dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    cent = x[rng.choice(len(x), size=k, replace=False)]
-    for _ in range(iters):
-        d2 = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        for j in range(k):
-            m = assign == j
-            if m.any():
-                cent[j] = x[m].mean(axis=0)
+    cent = _lloyd(x, k, iters, seed)
     _IVF_CACHE[key] = cent
     return cent
 

@@ -9,7 +9,7 @@ s = 1 unless a tile's page halo exceeds 4M) vs OFF
 (local_index_pairs=None), reports both walls and asserts the two row
 multisets are identical (a distributed EXCEPT ALL both ways).
 
-Usage: python scripts/dense_knn_probe.py [--repl 1000] [--cpus 32]
+Usage: python scripts/dense_knn_probe.py [--repl 1000] [--cpus N]
        [--skip-baseline]  (baseline = the 505s-class ring-join plan)
 """
 
@@ -28,7 +28,7 @@ sys.path.insert(0, REPO)
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--repl", type=int, default=1000)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1)))
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--skip-baseline", action="store_true")
     ap.add_argument("--k", type=int, default=5)

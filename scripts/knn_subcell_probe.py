@@ -14,12 +14,15 @@ split factor s chosen by ``local_max_halo_pages``:
 * s > 1 (a bound below the halo → s×s sub-grid) — per-group payload
   ~halo/s².
 
-Reports walls, the split factor, the per-group page bound implied by
-each plan, and asserts identical output rows (the exactness contract is
-plan-independent).
+One untimed warm-up run of the split plan pays the session's first
+kernel and job costs; then each plan is timed twice, the order
+alternating (split, s = 1, s = 1, split), so neither plan's wall carries
+a position bias.  Reports both walls per plan and their mean, the split
+factor, the per-group page bound implied by each plan, and asserts
+identical output rows (the exactness contract is plan-independent).
 
 Usage: python scripts/knn_subcell_probe.py [--pages 1500000]
-       [--queries 100000] [--cpus 32] [--halo-budget 200000]
+       [--queries 100000] [--cpus N] [--halo-budget 200000]
 """
 
 from __future__ import annotations
@@ -39,7 +42,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", type=int, default=1_500_000)
     ap.add_argument("--queries", type=int, default=100_000)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1)))
     ap.add_argument("--halo-budget", type=int, default=200_000)
     ap.add_argument("--k", type=int, default=5)
     ap.add_argument("--check-rows", action="store_true",
@@ -87,8 +90,16 @@ def main() -> None:
     with open("/proc/loadavg") as fh:
         load = fh.read().split()[0]
 
-    split_s, split_rows, split_df = run(args.halo_budget)
-    tile_s, tile_rows, tile_df = run(halo * 10)
+    run(args.halo_budget)  # warm-up, untimed
+    budgets = {"split": args.halo_budget, "tile": halo * 10}
+    walls = {"split": [], "tile": []}
+    last = {}
+    for order in (("split", "tile"), ("tile", "split")):
+        for plan in order:
+            wall, rows, df = run(budgets[plan])
+            walls[plan].append(round(wall, 1))
+            last[plan] = (rows, df)
+    (split_rows, split_df), (tile_rows, tile_df) = last["split"], last["tile"]
 
     out = {
         "probe": "knn_subcell",
@@ -100,8 +111,10 @@ def main() -> None:
         "split_factor": s_split,
         "tile_pass_group_pages": halo,
         "subcell_pass_group_pages_bound": -(-halo // (s_split * s_split)) * 1,
-        "tile_pass_s": round(tile_s, 1),
-        "subcell_pass_s": round(split_s, 1),
+        "tile_pass_s": round(sum(walls["tile"]) / 2, 1),
+        "subcell_pass_s": round(sum(walls["split"]) / 2, 1),
+        "tile_pass_walls_s": walls["tile"],
+        "subcell_pass_walls_s": walls["split"],
         "rows": split_rows,
     }
     assert tile_rows == split_rows, (tile_rows, split_rows)

@@ -9,7 +9,7 @@ What this checks: the tier-3 refine inherits the big side's partitioning
 across page partitions — the wall should scale with refine-row count, not
 collapse into one task.
 
-Usage: python scripts/pip_hotband_probe.py [--repl 200] [--cpus 32]
+Usage: python scripts/pip_hotband_probe.py [--repl 200] [--cpus N]
 Prints one JSON line.
 """
 
@@ -30,7 +30,7 @@ sys.path.insert(0, REPO)
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--repl", type=int, default=200)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1)))
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--runs", type=int, default=3)
     args = ap.parse_args()

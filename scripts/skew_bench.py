@@ -6,7 +6,7 @@ Measures the grouped aggregation path under worst-case key skew:
 for (a) algebraic aggs and (b) the array-payload fuser
 (fuse_first_valid vs fuse_first_valid_salted).
 
-Usage: python scripts/skew_bench.py [--rows 2000000] [--cpus 32]
+Usage: python scripts/skew_bench.py [--rows 2000000] [--cpus N]
 Appends a results line to stdout (JSON).
 """
 
@@ -38,7 +38,7 @@ def main() -> None:
     ap.add_argument("--rows", type=int, default=2_000_000)
     ap.add_argument("--fuse-rows", type=int, default=100_000)
     ap.add_argument("--dedup-docs", type=int, default=4_000)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1)))
     args = ap.parse_args()
 
     from pyspark.sql import functions as F

@@ -1,5 +1,7 @@
 """Web-graph ops: link extraction, exact-integer PageRank, float parity."""
 
+import re
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -60,14 +62,26 @@ def _py_pagerank_exact(edges, nodes, iters):
     return a
 
 
+TINY_NODES = list(range(4))
+TINY_EDGES = [(0, 1), (0, 1), (0, 2), (1, 0), (1, 2), (1, 3),
+              (2, 2), (2, 3), (2, 0), (3, 0), (3, 1), (3, 2)]
+
+
+def _tiny_graph(spark):
+    edf = spark.createDataFrame([Row(src=s, dst=d) for s, d in TINY_EDGES])
+    ndf = spark.createDataFrame([Row(doc_id=v) for v in TINY_NODES])
+    return edf, ndf
+
+
+def _pages_graph(spark):
+    p = pages(spark, SF_TINY, repl=1)
+    return page_edges(p), p.select("doc_id")
+
+
 def test_exact_pagerank_tiny_graph(spark):
-    nodes = list(range(4))
-    edges = [(0, 1), (0, 1), (0, 2), (1, 0), (1, 2), (1, 3),
-             (2, 2), (2, 3), (2, 0), (3, 0), (3, 1), (3, 2)]
-    ndf = spark.createDataFrame([Row(doc_id=v) for v in nodes])
-    edf = spark.createDataFrame([Row(src=s, dst=d) for s, d in edges])
+    edf, ndf = _tiny_graph(spark)
     got = {r.doc_id: r.a for r in pagerank_exact(edf, ndf, iters=4).collect()}
-    assert got == _py_pagerank_exact(edges, nodes, 4)
+    assert got == _py_pagerank_exact(TINY_EDGES, TINY_NODES, 4)
     # mass invariant: sum A_i = N * 60^i
     assert sum(got.values()) == 4 * SCALE**4
 
@@ -84,6 +98,37 @@ def test_exact_pagerank_on_pages_graph(spark):
     ref = _py_pagerank_exact(e, list(range(N_DOCS)), 5)
     got = {r.doc_id: r.a for r in out.collect()}
     assert got == ref
+
+
+@pytest.mark.parametrize("graph", [_tiny_graph, _pages_graph])
+def test_pagerank_is_trustrank_with_every_node_seeded(spark, graph):
+    """PageRank is the seeded recurrence with S = every node: the two
+    operators return identical rows."""
+    from datacube_core_spark.operators.graph import trustrank_exact
+
+    edges, nodes = graph(spark)
+    pr = sorted(map(tuple, pagerank_exact(edges, nodes, iters=4).collect()))
+    tr = sorted(map(tuple, trustrank_exact(edges, nodes, nodes, iters=4).collect()))
+    assert pr == tr and len(pr) > 0
+
+
+def _executed_joins(df):
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(re.findall(r"\b\w+Join\b", plan.split("== Initial Plan ==")[0]))
+
+
+@pytest.mark.parametrize("iters", [1, 3])
+def test_pagerank_plan_has_no_seed_join(spark, iters):
+    """Each PageRank round is one edges⋈ranks join plus one nodes⋈sums
+    left join, and the constant teleport indicator adds no seed join:
+    2·iters joins.  TrustRank's seed joins show up in the same count."""
+    from datacube_core_spark.operators.graph import trustrank_exact
+
+    edges, nodes = _pages_graph(spark)
+    assert _executed_joins(pagerank_exact(edges, nodes, iters=iters)) == 2 * iters
+    seeds = nodes.where(F.col("doc_id") % 7 == 0)
+    assert _executed_joins(trustrank_exact(edges, nodes, seeds, iters=iters)) > 2 * iters
 
 
 def test_float_pagerank_matches_exact_on_uniform_graph(spark):

@@ -84,7 +84,7 @@ def test_driver_frames_start_no_python_worker(spark, tmp_path):
     assert _reads_python_rdd(spark.createDataFrame([(1,)], "a INT"))  # the probe sees the list path
     regs = regions(spark)
     assert not _reads_python_rdd(regs)
-    index = PipIndex(spark, regs, GRID_PAGES, distributed_classify=False)
+    index = PipIndex(spark, regs, GRID_PAGES)
     assert not _reads_python_rdd(index.rect_candidates)
     empty = CheckpointedJob(spark, str(tmp_path / "missing"))._read(str(tmp_path / "missing"), CHECKPOINT_SCHEMA)
     assert not _reads_python_rdd(empty)

@@ -196,10 +196,11 @@ def test_pip_index_rectangular_tiles(spark, pages_pdf):
     assert got == exp and len(got) > 0
 
 
-def test_pip_index_distributed_classify_parity(spark):
-    """Forcing classification onto executors must produce an identical
-    covering table (every level, cell, interior flag, bbox and band flag)
-    and identical join output."""
+def test_pip_index_distributed_classify_parity(spark, monkeypatch):
+    """Forcing classification onto executors (build threshold 0) must
+    produce an identical covering table (every level, cell, interior
+    flag, bbox and band flag) and identical join output."""
+    from datacube_core_spark.operators import pip
     from datacube_core_spark.operators.pip import PipIndex
     from datacube_core_spark.sources.regions import regions, regions_complex
     from datacube_core_spark.geom.polygon import pack_multipolygon
@@ -215,8 +216,9 @@ def test_pip_index_distributed_classify_parity(spark):
     )
     regs = regs.unionByName(extra_df)
 
-    idx_d = PipIndex(spark, regs, GRID_PAGES, distributed_classify=False)
-    idx_x = PipIndex(spark, regs, GRID_PAGES, distributed_classify=True)
+    idx_d = PipIndex(spark, regs, GRID_PAGES)
+    monkeypatch.setattr(pip, "_DISTRIBUTED_BUILD_THRESHOLD", 0)
+    idx_x = PipIndex(spark, regs, GRID_PAGES)
 
     def snap(idx):
         return sorted(map(tuple, idx._table.collect()))
@@ -239,10 +241,11 @@ def test_pip_index_distributed_classify_parity(spark):
     assert set(idx_d.geom_map) == generic_ids
 
 
-def test_pip_index_driver_bytes_scale_with_generic(spark):
-    """Many-rect build: a distributed-classify index over thousands of
-    rect regions plus a handful of generic polygons keeps exactly the
-    generic blobs driver-side."""
+def test_pip_index_driver_bytes_scale_with_generic(spark, monkeypatch):
+    """Many-rect build: a distributed-classify index (build threshold 0)
+    over thousands of rect regions plus a handful of generic polygons
+    keeps exactly the generic blobs driver-side."""
+    from datacube_core_spark.operators import pip
     from datacube_core_spark.operators.pip import PipIndex
     from datacube_core_spark.sources.regions import regions_complex
     import numpy as np
@@ -264,7 +267,8 @@ def test_pip_index_driver_bytes_scale_with_generic(spark):
     regs = spark.createDataFrame(
         rows, "region_id INT, name STRING, left DOUBLE, bottom DOUBLE, right DOUBLE, top DOUBLE, geom BINARY"
     )
-    idx = PipIndex(spark, regs, GRID_PAGES, distributed_classify=True)
+    monkeypatch.setattr(pip, "_DISTRIBUTED_BUILD_THRESHOLD", 0)
+    idx = PipIndex(spark, regs, GRID_PAGES)
     assert set(idx.geom_map) <= {50_000 + j for j in range(len(gen))}, (
         f"driver holds rect blobs: {sorted(set(idx.geom_map))[:5]}..."
     )
@@ -338,7 +342,7 @@ def test_pip_mixed_rect_generic_reads_big_side_twice(spark, pages_pdf):
     regs = regions(spark).unionByName(spark.createDataFrame(
         extra, "region_id INT, name STRING, left DOUBLE, bottom DOUBLE, right DOUBLE, top DOUBLE, geom BINARY"
     ))
-    idx = PipIndex(spark, regs, GRID_PAGES, distributed_classify=False)
+    idx = PipIndex(spark, regs, GRID_PAGES)
     a = idx.join(pages(spark, SF_TINY).select("doc_id", "lon", "lat"), keep_cols=["doc_id"])
     got = sorted((int(r["doc_id"]), int(r["region_id"])) for r in a.collect())
 
@@ -374,6 +378,26 @@ def test_ivf_topk_recall_and_plan(spark):
     assert recall > 0.3, f"recall@10 = {recall} — below plausible IVF floor"
     # every query answered
     assert {g[0] for g in got} == {e[0] for e in exact}
+
+
+def test_train_centroids_matches_fixture(spark):
+    """The Spark-side quantizer trainer and the pyarrow fixture run one
+    Lloyd loop: fed the fixture parquet's rows in file order,
+    ``train_centroids`` returns exactly ``ivf_centroids_fixture()``."""
+    import numpy as np
+
+    from datacube_core_spark.operators.similarity import (
+        ivf_centroids_fixture,
+        train_centroids,
+    )
+
+    from .conftest import SF_SMALL
+
+    path = f"{SF_SMALL}/embeddings.parquet"
+    got = train_centroids(spark.read.parquet(path), k=16, iters=10, seed=42)
+    want = ivf_centroids_fixture(path, k=16, iters=10, seed=42)
+    assert got.shape == want.shape == (16, 64)
+    assert np.array_equal(got, want)
 
 
 def test_lsh_topk_recall_vs_brute_force(spark):

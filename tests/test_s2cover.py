@@ -183,7 +183,7 @@ def test_s2pip_matches_pipindex(spark):
     regs = _region_df(spark, specs)
     p = pages(spark, SF_TINY, repl=4).select("doc_id", "lon", "lat")
 
-    base = PipIndex(spark, regs, grid, distributed_classify=False).join(
+    base = PipIndex(spark, regs, grid).join(
         p, keep_cols=["doc_id"]
     ).select("doc_id", "region_id")
     s2j = S2PipIndex(spark, regs).join(p, keep_cols=["doc_id"]).select(
@@ -237,11 +237,12 @@ def test_s2pip_plan_is_broadcast_no_python_join(spark):
 
 
 @pytest.mark.parametrize("index_cls", ["S2PipIndex", "GeohashPipIndex"])
-def test_s2pip_distributed_cover_matches_driver(spark, index_cls):
-    """Forcing the executor-side covering build (distributed_cover=True)
+def test_s2pip_distributed_cover_matches_driver(spark, index_cls, monkeypatch):
+    """Forcing the executor-side covering build (build threshold 0)
     must give row-identical joins to the driver-loop build, and pull NO
     rect-region geometry blobs to the driver — for both covering
     indexes."""
+    from datacube_core_spark.operators import pip
     from datacube_core_spark.operators.ghpip import GeohashPipIndex
     from datacube_core_spark.operators.s2pip import S2PipIndex
     from datacube_core_spark.sources.pages import pages
@@ -257,8 +258,9 @@ def test_s2pip_distributed_cover_matches_driver(spark, index_cls):
     regs = _region_df(spark, specs)
     p = pages(spark, SF_TINY, repl=2).select("doc_id", "lon", "lat")
 
-    drv = cls(spark, regs, distributed_cover=False)
-    dst = cls(spark, regs, distributed_cover=True)
+    drv = cls(spark, regs)
+    monkeypatch.setattr(pip, "_DISTRIBUTED_BUILD_THRESHOLD", 0)
+    dst = cls(spark, regs)
     assert drv.levels == dst.levels
     assert (drv._has_catalyst, drv._has_generic) == (dst._has_catalyst, dst._has_generic) == (True, True)
     a = {tuple(r) for r in drv.join(p, keep_cols=["doc_id"]).select("doc_id", "region_id").collect()}
@@ -424,7 +426,7 @@ def test_s2pip_tier_flags_are_build_time(spark):
     ix = S2PipIndex(spark, rect_only)
     assert ix._has_catalyst is True and ix._has_generic is False
     got = {tuple(r) for r in ix.join(p, keep_cols=["doc_id"]).select("doc_id", "region_id").collect()}
-    want = {tuple(r) for r in PipIndex(spark, rect_only, grid, distributed_classify=False)
+    want = {tuple(r) for r in PipIndex(spark, rect_only, grid)
             .join(p, keep_cols=["doc_id"]).select("doc_id", "region_id").collect()}
     assert got == want and len(got) > 0
 
@@ -435,6 +437,6 @@ def test_s2pip_tier_flags_are_build_time(spark):
     ix2 = S2PipIndex(spark, diamond)
     assert ix2._has_generic is True
     got2 = {tuple(r) for r in ix2.join(p, keep_cols=["doc_id"]).select("doc_id", "region_id").collect()}
-    want2 = {tuple(r) for r in PipIndex(spark, diamond, grid, distributed_classify=False)
+    want2 = {tuple(r) for r in PipIndex(spark, diamond, grid)
              .join(p, keep_cols=["doc_id"]).select("doc_id", "region_id").collect()}
     assert got2 == want2
